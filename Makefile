@@ -1,8 +1,10 @@
 # tiledspark — common entry points
 .PHONY: test bench scaling pyfiles
 
+# the tier-1 command from ROADMAP.md
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS=$$(env -u OMP_NUM_THREADS nproc) SPARK_LOCAL_DIRS=/tmp/spark-local \
+		python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

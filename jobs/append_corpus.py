@@ -15,11 +15,10 @@ Byte-identical duplicates need no separate exact pass here: identical text
 gives identical signatures, which collide in EVERY band, so the pair is a
 certain candidate at Jaccard 1.0.
 
-Keeper semantics MATCH full-batch dedup (base ∪ batch, CC keeper = the
-component's anchor): connected components run over all qualifying pairs;
-a new doc is dropped if its component contains ANY base doc (the base —
-already deduped and published — always wins), otherwise the component's
-minimum new id survives. Pinned against full-batch dedup in the e2e test.
+Pairs are gated and keepers chosen by the shared dedup core
+(tiledspark.dedup.jaccard_gate + anchored_keepers, the same calls
+streaming.stream_near_dedupe makes per micro-batch), with the base corpus
+as the history. Pinned against full-batch dedup in the e2e test.
 
 Prints: {"n_new", "n_pairs", "n_components", "n_dropped_vs_base",
 "n_dropped_within_batch", "n_kept", "out"}.
@@ -31,7 +30,6 @@ import argparse
 import json
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -51,7 +49,7 @@ def main() -> None:
     ap.add_argument("--est-threshold", type=float, default=0.2)
     args = ap.parse_args()
 
-    from tiledspark.graph import connected_components
+    from tiledspark.dedup import anchored_keepers, jaccard_gate
     from tiledspark.textops import band_signatures, lsh_candidate_pairs_incremental
 
     spark = SparkSession.builder.appName("tiledspark-append-corpus").getOrCreate()
@@ -64,50 +62,17 @@ def main() -> None:
     )
     n_new = new_docs.count()
 
-    pairs = lsh_candidate_pairs_incremental(
-        new_docs, base_docs, idc, text_col=txt,
-        est_threshold=args.est_threshold, base_banded=base_banded,
-    ).where(
-        F.col("n_inter").cast("double")
-        >= F.lit(args.min_jaccard) * F.col("n_union").cast("double")
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
-    n_pairs = pairs.count()
-
-    new_ids = new_docs.select(F.col(idc).alias("id")).localCheckpoint()
-    if n_pairs:
-        labels = connected_components(pairs)  # (id, comp), pair nodes only
-        lab_new = labels.join(new_ids, "id", "left_semi")
-        lab_base = labels.join(new_ids, "id", "left_anti")
-        # components anchored by ANY base doc drop all their new members;
-        # unanchored components keep their minimum new id
-        anchored = lab_base.select("comp").distinct()
-        drop_vs_base = lab_new.join(anchored, "comp", "left_semi").select("id")
-        floating = lab_new.join(anchored, "comp", "left_anti")
-        keep_floating = floating.groupBy("comp").agg(F.min("id").alias("id"))
-        drop_within = floating.join(
-            keep_floating.select("id"), "id", "left_anti"
-        ).select("id")
-        # ONE stats job for both drop counts (round 9, the streaming-op
-        # fusion): the tagged union's agg materializes the dropped
-        # checkpoint the kept anti-join re-reads
-        dropped = (
-            drop_vs_base.withColumn("_vs_base", F.lit(True))
-            .unionByName(drop_within.withColumn("_vs_base", F.lit(False)))
-            .localCheckpoint(eager=False)
-        )
-        cnt = dropped.agg(
-            F.sum(F.col("_vs_base").cast("int")).alias("n_base"),
-            F.count(F.lit(1)).alias("n_all"),
-        ).collect()[0]
-        n_drop_base = int(cnt["n_base"] or 0)
-        n_drop_within = int(cnt["n_all"]) - n_drop_base
-        n_components = labels.select("comp").distinct().count()
-        kept = new_docs.join(
-            dropped.select(F.col("id").alias(idc)), idc, "left_anti"
-        ).localCheckpoint(eager=False)
-    else:
-        n_drop_base = n_drop_within = n_components = 0
-        kept = new_docs
+    pairs, n_pairs = jaccard_gate(
+        lsh_candidate_pairs_incremental(
+            new_docs, base_docs, idc, text_col=txt,
+            est_threshold=args.est_threshold, base_banded=base_banded,
+        ),
+        args.min_jaccard,
+    )
+    kept, labels, n_drop_base, n_drop_within = anchored_keepers(
+        new_docs, pairs, n_pairs, idc
+    )
+    n_components = labels.select("comp").distinct().count() if n_pairs else 0
     n_kept = kept.count()
 
     kept.write.mode("overwrite").parquet(args.out)

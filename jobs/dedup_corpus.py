@@ -5,28 +5,16 @@
       --docs <documents-parquet> --out <deduped-parquet> \
       [--min-jaccard 0.5] [--id-col doc_id] [--text-col text]
 
-The standard web-corpus sweep, end-to-end on the engine's operators:
+The standard web-corpus sweep as one call to the shared dedup core,
+tiledspark.dedup.exact_near_keepers: optional line-level boilerplate removal
+(--boilerplate-max-df N; similarity then reads the added text_clean column,
+the original text is never mutated), exact dedup on md5(text), banded
+MinHash LSH pairs gated at exact shingle Jaccard >= --min-jaccard, and one
+keeper (the min id) per connected component of the pair graph (--cc-impl).
+The survivors are written as parquet and ONE JSON stats line is printed.
 
-0. (optional, --boilerplate-max-df N) LINE-level boilerplate removal —
-   drop lines appearing in > N distinct docs (nav menus, cookie banners,
-   footers) BEFORE similarity, since shared boilerplate inflates Jaccard
-   between unrelated pages. Adds text_clean; the original text column is
-   never mutated (byte-identity invariant), and all similarity stages
-   below run on the CLEANED text when this stage is on.
-1. EXACT dedup — hash-groupBy on md5(text); keeper = min id per
-   fingerprint. One shuffle of (fp, id) pairs; documents never move.
-2. NEAR-dup candidate pairs among the exact keepers — banded MinHash LSH
-   (textops.lsh_candidate_pairs: the band exchange carries ids only),
-   filtered to exact shingle Jaccard >= --min-jaccard.
-3. TRANSITIVE keeper selection — connected components over the pair graph
-   (graph.connected_components, min-label propagation: one narrow-shuffle
-   job per round, rounds = component diameter) so A~B~C collapses to one
-   survivor even when (A, C) was never surfaced as a pair.
-4. Write the surviving docs partitioned for downstream consumption and
-   print ONE JSON line of stats.
-
-Prints: {"n_docs", "n_exact_dropped", "n_near_pairs", "n_components",
-"n_near_dropped", "n_kept", "out"}.
+Prints: {"n_docs", "n_boiler_lines_dropped", "n_exact_dropped",
+"n_near_pairs", "n_components", "n_near_dropped", "n_kept", "out"}.
 """
 
 from __future__ import annotations
@@ -35,7 +23,6 @@ import argparse
 import json
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -55,66 +42,20 @@ def main() -> None:
                          "with document frequency > N before similarity")
     args = ap.parse_args()
 
-    from tiledspark.graph import dedup_keepers_with_labels
-    from tiledspark.textops import drop_boilerplate_lines, lsh_candidate_pairs
+    from tiledspark.dedup import exact_near_keepers
 
     spark = SparkSession.builder.appName("tiledspark-dedup-corpus").getOrCreate()
-    idc, txt = args.id_col, args.text_col
-
     docs = spark.read.parquet(args.docs)
     n_docs = docs.count()
-
-    # 0. optional line-level boilerplate stage: similarity runs on the
-    # cleaned column; the original text column rides through untouched
-    n_boiler_lines = 0
-    if args.boilerplate_max_df is not None:
-        docs = drop_boilerplate_lines(
-            docs, id_col=idc, text_col=txt, max_df=args.boilerplate_max_df
-        ).localCheckpoint(eager=False)
-        n_boiler_lines = docs.agg(F.sum("n_lines_dropped")).collect()[0][0] or 0
-        txt = "text_clean"
-
-    # 1. exact stratum: keeper = min id per content fingerprint
-    fp = docs.select(F.col(idc), F.md5(F.col(txt).cast("binary")).alias("fp"))
-    keep_exact = fp.groupBy("fp").agg(F.min(idc).alias(idc)).select(idc)
-    exact_docs = docs.join(keep_exact, idc, "left_semi")
-    n_exact = exact_docs.count()
-
-    # 2. near-dup pairs among exact keepers (ids-only band exchange)
-    pairs = lsh_candidate_pairs(
-        exact_docs, idc, text_col=txt, est_threshold=args.est_threshold
-    ).where(
-        F.col("n_inter").cast("double")
-        >= F.lit(args.min_jaccard) * F.col("n_union").cast("double")
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
-    n_pairs = pairs.count()
-
-    # 3. transitive components -> one keeper per component. The labels frame
-    # from the SAME fixpoint run feeds the n_components stat — the CC job
-    # (the most iterative phase at corpus scale) runs exactly once
-    # (VERDICT r5 #3 / ADVICE r5).
-    kept, labels = dedup_keepers_with_labels(
-        exact_docs, pairs, id_col=idc, impl=args.cc_impl
+    kept, _, stats = exact_near_keepers(
+        docs, n_docs, args.id_col, args.text_col,
+        min_jaccard=args.min_jaccard,
+        est_threshold=args.est_threshold,
+        cc_impl=args.cc_impl,
+        boilerplate_max_df=args.boilerplate_max_df,
     )
-    kept = kept.localCheckpoint(eager=False)
-    n_kept = kept.count()
-    n_components = labels.select("comp").distinct().count() if n_pairs else 0
-
     kept.write.mode("overwrite").parquet(args.out)
-    print(
-        json.dumps(
-            {
-                "n_docs": n_docs,
-                "n_boiler_lines_dropped": int(n_boiler_lines),
-                "n_exact_dropped": n_docs - n_exact,
-                "n_near_pairs": n_pairs,
-                "n_components": n_components,
-                "n_near_dropped": n_exact - n_kept,
-                "n_kept": n_kept,
-                "out": args.out,
-            }
-        )
-    )
+    print(json.dumps({"n_docs": n_docs, **stats, "out": args.out}))
 
 
 if __name__ == "__main__":

@@ -32,13 +32,12 @@ operators):
    guarded), corpus scored in one JVM-native scan, kept by the Pareto
    soft threshold (score > 1 - X, X ~ Pareto(alpha) from a deterministic
    hash draw) or a hard --quality-min-score floor; survivors semi-joined.
-2. BOILERPLATE (optional, --boilerplate-max-df N) — corpus-level line-df
-   filter (textops.drop_boilerplate_lines); similarity stages below read the
-   cleaned column, the original text column is never mutated.
-3. EXACT dedup — hash-groupBy on md5(text); keeper = min id.
-4. NEAR-dup — banded MinHash LSH candidates (ids-only band exchange) at
-   exact shingle Jaccard >= --min-jaccard, collapsed transitively via
-   connected components; one keeper per component.
+2-4. BOILERPLATE (optional, --boilerplate-max-df N) -> EXACT -> NEAR-dup —
+   the shared dedup core (tiledspark.dedup.exact_near_keepers, the same
+   call jobs/dedup_corpus.py makes): line-df boilerplate filter, md5 exact
+   stratum, MinHash LSH pairs at exact Jaccard >= --min-jaccard, one keeper
+   per connected component. Later stages read the cleaned column; the
+   original text column is never mutated.
 5. SCRUB (optional, --scrub-pii) — emails/IPv4/intl-phone redaction into
    a text_scrubbed column (native regexp, original text untouched).
 6. EMBED (unless --no-embed) — hashed_tf_embedding (feature-hashing TF,
@@ -139,12 +138,10 @@ def main() -> None:
     if (args.quality_pos is None) != (args.quality_neg is None):
         ap.error("--quality-pos and --quality-neg must be given together")
 
-    from tiledspark.graph import dedup_keepers_with_labels
+    from tiledspark.dedup import exact_near_keepers
     from tiledspark.textops import (
-        drop_boilerplate_lines,
         hashed_tf_embedding,
         lang_id_expr,
-        lsh_candidate_pairs,
         repetition_stats,
         scrub_pii,
         train_unigram_logprobs,
@@ -284,6 +281,14 @@ def main() -> None:
         if n_decontam_dropped:
             docs = docs.join(flagged, idc, "left_anti")
 
+    # docs left after the screens so far, from the stage counts (no job)
+    n_screened = (
+        n_quality
+        - sum((rep_rejected or {}).values())
+        - sum((surprisal_rejected or {}).values())
+        - n_decontam_dropped
+    )
+
     # 1e. optional seed-set quality classifier (round 8, op 96 — the GPT-3
     # appendix-A step): train on small curated pos/neg seed parquets
     # (driver-side numpy on collected hashed-TF features — seed-set-sized
@@ -324,53 +329,20 @@ def main() -> None:
         # score row for (token-less text) — count the stage's drop as
         # before-minus-after so those are attributed here, not to dedup.
         keep_ids = kept_scores.select(idc).localCheckpoint(eager=False)
-        n_at_stage = (
-            n_quality
-            - sum((rep_rejected or {}).values())
-            - sum((surprisal_rejected or {}).values())
-            - n_decontam_dropped
-        )
-        n_quality_clf_dropped = n_at_stage - keep_ids.count()
+        n_quality_clf_dropped = n_screened - keep_ids.count()
         if n_quality_clf_dropped:
             docs = docs.join(keep_ids, idc, "left_semi")
 
-    n_before_dedup = (
-        n_quality
-        - sum((rep_rejected or {}).values())
-        - sum((surprisal_rejected or {}).values())
-        - n_decontam_dropped
-        - n_quality_clf_dropped
+    # 2-4. boilerplate (optional) -> exact -> near-dup keepers: the shared
+    # dedup core; later stages read the column similarity ran on
+    kept, txt, dedup_stats = exact_near_keepers(
+        docs, n_screened - n_quality_clf_dropped, idc, txt,
+        min_jaccard=args.min_jaccard,
+        est_threshold=args.est_threshold,
+        cc_impl=args.cc_impl,
+        boilerplate_max_df=args.boilerplate_max_df,
     )
-
-    # 2. optional boilerplate stage (similarity reads the cleaned column)
-    n_boiler_lines = 0
-    if args.boilerplate_max_df is not None:
-        docs = drop_boilerplate_lines(
-            docs, id_col=idc, text_col=txt, max_df=args.boilerplate_max_df
-        ).localCheckpoint(eager=False)
-        n_boiler_lines = docs.agg(F.sum("n_lines_dropped")).collect()[0][0] or 0
-        txt = "text_clean"
-
-    # 3. exact dedup
-    fp = docs.select(F.col(idc), F.md5(F.col(txt).cast("binary")).alias("fp"))
-    keep_exact = fp.groupBy("fp").agg(F.min(idc).alias(idc)).select(idc)
-    exact_docs = docs.join(keep_exact, idc, "left_semi")
-    n_exact = exact_docs.count()
-
-    # 4. near-dup: LSH candidates -> exact-Jaccard gate -> transitive keepers
-    pairs = lsh_candidate_pairs(
-        exact_docs, idc, text_col=txt, est_threshold=args.est_threshold
-    ).where(
-        F.col("n_inter").cast("double")
-        >= F.lit(args.min_jaccard) * F.col("n_union").cast("double")
-    ).select("id_a", "id_b").localCheckpoint(eager=False)
-    n_pairs = pairs.count()
-    kept, labels = dedup_keepers_with_labels(
-        exact_docs, pairs, id_col=idc, impl=args.cc_impl
-    )
-    kept = kept.localCheckpoint(eager=False)
-    n_kept = kept.count()
-    n_components = labels.select("comp").distinct().count() if n_pairs else 0
+    n_kept = dedup_stats["n_kept"]
 
     # 5. vectorize: feature-hashing TF embedding + SQ8 codes (both columns
     # ride the output; production keeps `code` at rest and reranks with the
@@ -430,16 +402,12 @@ def main() -> None:
                 "n_after_quality": n_quality,
                 "repetition_rejected": rep_rejected,
                 "surprisal_rejected": surprisal_rejected,
-                "n_boiler_lines_dropped": int(n_boiler_lines),
-                "n_exact_dropped": n_before_dedup - n_exact,
-                "n_near_pairs": n_pairs,
-                "n_components": n_components,
-                "n_near_dropped": n_exact - n_kept - n_semantic_dropped,
+                **dedup_stats,
                 "n_semantic_dropped": n_semantic_dropped,
                 "n_decontam_dropped": n_decontam_dropped,
                 "n_quality_clf_dropped": n_quality_clf_dropped,
                 "quality_train_acc": quality_train_acc,
-                "n_kept": n_kept,
+                "n_kept": n_kept,  # after semantic dedup, unlike dedup_stats'
                 "embedded": not args.no_embed,
                 "pii_redacted": pii_counts,
                 "sq8_params": sq_params,

@@ -191,18 +191,6 @@ def test_join_output_golden_byte_for_byte(spark, joined_inputs, pages_path):
     assert digest == frozen, f"join output diverged from golden ({len(out)} rows)"
 
 
-def test_cogroup_refine_path_equals_broadcast_path(spark, joined_inputs):
-    """Round-1 fix: with the driver-collect gate forced to 0, PIP refinement
-    runs via the cogrouped applyInPandas path and must produce the identical
-    pair set (no polygon ever reaches the driver)."""
-    docs, zones = joined_inputs
-    a = spatial_join(spark, docs, zones)
-    b = spatial_join(spark, docs, zones, broadcast_zone_geo_max=0)
-    ka = {(r["zone_id"], r["url"]) for r in a.collect()}
-    kb = {(r["zone_id"], r["url"]) for r in b.collect()}
-    assert ka == kb and len(ka) > 0
-
-
 def test_oracle_points_clear_of_polygon_edges():
     """ADVICE r3 (edge-coincidence invariant, noted in queries_spatial): the
     DuckDB spatial oracles re-derive crossing PARITY only, while the Spark

@@ -130,3 +130,82 @@ def test_knn_self_join_matches_bruteforce(spark):
     for a, b in ((10, 11), (20, 21)):
         row = got[(got["query_key"] == urls[a]) & (got["rank"] == 1)].iloc[0]
         assert row["url"] == urls[b] and row["dist_m"] == 0.0
+
+
+def _settled_persistent_rdds(spark, floor=None, timeout_s=30.0):
+    """Persistent-RDD count once unreachable local checkpoints are cleaned.
+
+    Checkpoint blocks stay registered until the JVM ContextCleaner drops
+    them after GC, so the raw count drifts with GC timing. Poll with forced
+    GCs until the count stops changing (or reaches `floor`)."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    deadline = time.monotonic() + timeout_s
+    seen: list[int] = []
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.5)
+        seen.append(sc._jsc.getPersistentRDDs().size())
+        if floor is not None and seen[-1] <= floor:
+            return seen[-1]
+        if floor is None and len(seen) >= 3 and len(set(seen[-3:])) == 1:
+            return seen[-1]
+        if time.monotonic() > deadline:
+            return seen[-1]
+
+
+def _knn_cache_inputs(spark):
+    # docs clustered in one 1x1 degree box; query 1 sits far outside it, so
+    # it needs more than one round and ends in the brute-force path
+    docs = spark.range(400).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        (F.lit(10.0) + (F.col("id") % 20) * 0.05).alias("lat"),
+        (F.lit(10.0) + (F.col("id") / 20).cast("int") * 0.05).alias("lon"),
+    )
+    queries = spark.createDataFrame(
+        [(0, 10.5, 10.5), (1, -40.0, -120.0)], "query_id long, lat double, lon double"
+    )
+    return docs, queries
+
+
+def test_knn_doc_cache_freed_after_looped_calls(spark):
+    """knn_cell_ring caches the doc cells per call; ten calls in one session
+    leave no persisted RDD behind."""
+    docs, queries = _knn_cache_inputs(spark)
+    before = _settled_persistent_rdds(spark)
+    for _ in range(10):
+        rows = knn_cell_ring(spark, docs, queries, k=3, max_radius=8).collect()
+        assert len(rows) == 6
+    del rows
+    assert _settled_persistent_rdds(spark, floor=before) <= before
+
+
+def test_knn_doc_cache_freed_when_call_fails(spark):
+    """The doc-cell cache is dropped on the failure path too: a call that
+    fails in its first action, and one that fails after a round has
+    materialized the cache."""
+    import pytest
+
+    docs, queries = _knn_cache_inputs(spark)
+    bad_queries = queries.withColumn(
+        "lat", F.raise_error(F.lit("bad query")).cast("double")
+    )
+
+    class _FailOnSecondRound(list):
+        def append(self, plan):
+            if self:
+                raise RuntimeError("injected failure in round 2")
+            super().append(plan)
+
+    before = _settled_persistent_rdds(spark)
+    with pytest.raises(Exception, match="bad query"):
+        knn_cell_ring(spark, docs, bad_queries, k=3)
+    with pytest.raises(RuntimeError, match="round 2"):
+        knn_cell_ring(
+            spark, docs, queries, k=3, max_radius=8,
+            _round_plans=_FailOnSecondRound(),
+        )
+    assert _settled_persistent_rdds(spark, floor=before) <= before

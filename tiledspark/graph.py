@@ -113,7 +113,7 @@ def dedup_keepers_with_labels(
 ) -> tuple[DataFrame, DataFrame]:
     """Like dedup_keepers, but ALSO returns the (id, comp) component labels
     the keeper selection was derived from, so callers needing component
-    stats (e.g. jobs/dedup_corpus.py's n_components line) reuse the one
+    stats (e.g. dedup.exact_near_keepers' n_components) reuse the one
     localCheckpoint-ed fixpoint instead of running the multi-round CC job
     twice (ADVICE r5 / VERDICT r5 #3). Returns (keepers, labels).
 

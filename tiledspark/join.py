@@ -35,11 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiledspark import tiles
-from tiledspark.geom import (
-    np_points_in_polygon,
-    np_polygon_cover,
-    point_in_polygon_expr,
-)
+from tiledspark.geom import np_polygon_cover, point_in_polygon_expr
 
 DEFAULT_Z_JOIN = 12
 DEFAULT_Z_MIN = 6
@@ -106,18 +102,6 @@ def doc_cells_for_join(
     ).withColumn("cell", F.explode(anc))
 
 
-def _zones_broadcast(spark: SparkSession, zones: DataFrame):
-    rows = zones.select("zone_id", "ring", "holes").collect()
-    geo = {
-        r["zone_id"]: (
-            _ring_to_np(r["ring"]),
-            [_ring_to_np(h) for h in _holes_list(r["holes"])],
-        )
-        for r in rows
-    }
-    return spark.sparkContext.broadcast(geo)
-
-
 def spatial_join(
     spark: SparkSession,
     docs: DataFrame,
@@ -128,7 +112,6 @@ def spatial_join(
     broadcast_zone_cells_max: int = 2_000_000,
     hot_cell_threshold: int = 100_000,
     salt_k: int = 16,
-    broadcast_zone_geo_max: int = 50_000,  # retained for API compat; unused
 ) -> DataFrame:
     """-> (zone_id, <doc_key>, lat, lon, tile_id) — one row per (zone, doc)
     containment pair; tile_id is the doc's base-zoom assignment.
@@ -136,9 +119,7 @@ def spatial_join(
     PIP refinement (round 7): a native Column crossing-number filter over a
     zone_id equi-join (see the inline comment at the refine stage) —
     replaced the gated pandas/cogroup paths of rounds 1-6; no Python, no
-    driver geometry round-trip at any zone count, one fewer count job.
-    `broadcast_zone_geo_max` is kept in the signature for source
-    compatibility but no longer gates anything."""
+    driver geometry round-trip at any zone count, one fewer count job."""
     zc = build_zone_cells(zones, z_join, z_min).cache()
     n_zone_cells = zc.count()  # measured, drives the explicit plan choice
     dc = doc_cells_for_join(docs, z_join, z_min).select(

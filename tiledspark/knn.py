@@ -121,6 +121,30 @@ def knn_cell_ring(
         )
         .cache()
     )
+    # the cache lives for this call only, whether it returns or raises
+    try:
+        return _ring_search(
+            doc_cells, queries, k, zoom, doc_key, max_radius, _round_plans,
+            adaptive_start, growth,
+        )
+    finally:
+        doc_cells.unpersist()
+
+
+def _ring_search(
+    doc_cells: DataFrame,
+    queries: DataFrame,
+    k: int,
+    zoom: int,
+    doc_key: str,
+    max_radius: int,
+    _round_plans: list | None,
+    adaptive_start: bool,
+    growth: int,
+) -> DataFrame:
+    """knn_cell_ring's round loop over the cached doc cells (_dk, d_lat,
+    d_lon, cell). Every part of the returned frame is checkpointed before
+    it returns, so the caller may drop the doc-cell cache right after."""
     n = 1 << zoom
     q0 = queries.select(
         "query_id",
@@ -327,7 +351,6 @@ def knn_cell_ring(
     out = resolved_parts[0]
     for p in resolved_parts[1:]:
         out = out.unionByName(p)
-    doc_cells.unpersist()
     return out
 
 

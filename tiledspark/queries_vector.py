@@ -13,23 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tiledspark.registry import query, table
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _sqnorm(a):
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
+from tiledspark.vector import _dot, _sqnorm
 
 _DOT_SQL = (
     "list_aggregate(list_transform(list_zip({a}, {b}), "
@@ -53,17 +37,13 @@ _DOT_SQL = (
     """,
 )
 def vector_topk_bruteforce(spark, sf_dir):
-    from tiledspark.vector import _widen
-
     e = table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    # widen (round 9, guide §4/§2.5): the embeddings table arrives in ONE
-    # parquet split, so the interpreted-HOF dot products otherwise run on a
-    # single core (measured 0.94 s for a 2k-row table on local[32]); the
-    # repartition is a 2k-row shuffle, and the result is partitioning-
-    # independent (total order: cos desc, vec_id asc)
+    # no repartition: widening this single-split 2k-row table measured
+    # within noise of the plain scan at local[4], while its partition-count
+    # probe costs an extra planning pass per call
     scored = (
-        _widen(e.where(F.col("vec_id") != 0))
+        e.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",

@@ -251,9 +251,9 @@ def stream_near_dedupe(
     itself), survivors append to out_dir and their band signatures to
     sig_dir — so the history is never re-signed (the incremental-append
     scale shape, textops.lsh_candidate_pairs_incremental, inside
-    foreachBatch). Keeper semantics match full-batch dedup over
-    history ∪ batch: components anchored by a history doc drop all their
-    batch members (op 84's rule).
+    foreachBatch). Pairs are gated and keepers chosen by the shared dedup
+    core (dedup.jaccard_gate + dedup.anchored_keepers, the same calls
+    jobs/append_corpus.py makes), with the stored history as the base.
 
     Replay/idempotence: ids already present in the signature store are
     dropped up front (exact id-replay guard), and a replayed batch's
@@ -263,8 +263,12 @@ def stream_near_dedupe(
     on a cluster this runs unbounded)."""
     import os
 
-    from tiledspark.graph import connected_components
-    from tiledspark.textops import band_signatures, lsh_candidate_pairs_incremental
+    from tiledspark.dedup import anchored_keepers, jaccard_gate
+    from tiledspark.textops import (
+        band_signatures,
+        lsh_candidate_pairs,
+        lsh_candidate_pairs_incremental,
+    )
 
     stats: list[dict] = []
 
@@ -279,64 +283,23 @@ def stream_near_dedupe(
         # extra job barrier per checkpoint per micro-batch
         batch_df = batch_df.localCheckpoint(eager=False)
         n_in = batch_df.count()
-        have_history = _has_parquet(sig_dir)
         n_replay = 0
-        if have_history:
+        if _has_parquet(sig_dir):
             sigs = spark.read.parquet(sig_dir)
             seen_ids = sigs.select(id_col).dropDuplicates([id_col])
             fresh = batch_df.join(seen_ids, id_col, "left_anti").localCheckpoint(
                 eager=False
             )
             n_replay = n_in - fresh.count()
+            cand = lsh_candidate_pairs_incremental(
+                fresh, spark.read.parquet(out_dir), id_col, text_col=text_col,
+                base_banded=sigs,
+            )
         else:
             fresh = batch_df
-
-        if have_history:
-            base_docs = spark.read.parquet(out_dir)
-            pairs = lsh_candidate_pairs_incremental(
-                fresh, base_docs, id_col, text_col=text_col,
-                base_banded=spark.read.parquet(sig_dir),
-            )
-        else:
-            from tiledspark.textops import lsh_candidate_pairs
-
-            pairs = lsh_candidate_pairs(fresh, id_col, text_col=text_col)
-        pairs = pairs.where(
-            F.col("n_inter").cast("double")
-            >= F.lit(min_jaccard) * F.col("n_union").cast("double")
-        ).select("id_a", "id_b").localCheckpoint(eager=False)
-
-        new_ids = fresh.select(F.col(id_col).alias("id"))
-        if pairs.take(1):
-            labels = connected_components(pairs)
-            lab_new = labels.join(new_ids, "id", "left_semi")
-            anchored = labels.join(new_ids, "id", "left_anti").select("comp").distinct()
-            drop_hist = lab_new.join(anchored, "comp", "left_semi").select("id")
-            floating = lab_new.join(anchored, "comp", "left_anti")
-            keep_floating = floating.groupBy("comp").agg(F.min("id").alias("id"))
-            drop_within = floating.join(
-                keep_floating.select("id"), "id", "left_anti"
-            ).select("id")
-            # ONE stats job (was two counts): the tagged union's agg
-            # materializes the dropped checkpoint and returns both scalars;
-            # the kept anti-join below re-reads the blocks
-            dropped = (
-                drop_hist.withColumn("_vs_hist", F.lit(True))
-                .unionByName(drop_within.withColumn("_vs_hist", F.lit(False)))
-                .localCheckpoint(eager=False)
-            )
-            cnt = dropped.agg(
-                F.sum(F.col("_vs_hist").cast("int")).alias("n_hist"),
-                F.count(F.lit(1)).alias("n_all"),
-            ).collect()[0]
-            n_hist = int(cnt["n_hist"] or 0)
-            n_within = int(cnt["n_all"]) - n_hist
-            kept = fresh.join(
-                dropped.select(F.col("id").alias(id_col)), id_col, "left_anti"
-            ).localCheckpoint(eager=False)
-        else:
-            n_hist = n_within = 0
-            kept = fresh
+            cand = lsh_candidate_pairs(fresh, id_col, text_col=text_col)
+        pairs, n_pairs = jaccard_gate(cand, min_jaccard)
+        kept, _, n_hist, n_within = anchored_keepers(fresh, pairs, n_pairs, id_col)
         n_kept = kept.count()
         kept.write.mode("append").parquet(out_dir)
         band_signatures(kept, id_col, text_col=text_col).write.mode("append").parquet(

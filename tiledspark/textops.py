@@ -126,8 +126,9 @@ def with_minhash(
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Fan a narrow input out to the session's parallelism before the
-    interpreted-HOF shingle/signature work.
+    """Fan a narrow input out to the session's parallelism before
+    interpreted-HOF work: the shingle/signature pass here and the exact
+    cosine scoring fallbacks in vector.py.
 
     Higher-order-function lambdas are interpreted per element (not
     codegen'd), so the signature pass is CPU-bound on however many input
@@ -136,7 +137,8 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     one core, 1.8 s of a 2.1 s pass serialized in shingle construction. A
     100-TB scan arrives in thousands of splits and passes through untouched
     (the gate only widens, never narrows, and costs no job — partition
-    count comes from the compiled plan)."""
+    count comes from the compiled plan). Every caller's result is
+    partitioning-independent (a total order or an order-free aggregate)."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

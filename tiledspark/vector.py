@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tiledspark.textops import _ensure_parallelism
+
 LSH_SEED = 424242
 N_TABLES = 8
 N_BITS = 16  # round 2 shipped 8 — too coarse past ~10^5 vectors
@@ -99,48 +101,31 @@ def with_lsh_buckets(df: DataFrame, emb_col: str = "embedding", dim: int = 64,
     )
 
 
-def _widen(df: DataFrame) -> DataFrame:
-    """Fan a narrow scan out to the session's parallelism before
-    interpreted-HOF cosine scoring (guide §2.5 'synthetic partitioning' /
-    §4: HOF lambdas are interpreted per element, so a small single-file
-    corpus arriving in ONE 32 MB split serializes the whole scoring pass
-    on one core — textops._ensure_parallelism is the same gate for the
-    shingle pass). A 100-TB scan arrives in thousands of splits and passes
-    through untouched; the gate only widens, never narrows, and costs no
-    job (partition count comes from the compiled plan). Results are
-    partitioning-independent: every caller ranks with a total order
-    (cos desc, id asc)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
-def _cos_expr(a, b):
-    dot = F.aggregate(
+def _dot(a, b):
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
 
-    def _n(v):
-        return F.sqrt(
-            F.aggregate(
-                F.transform(v, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
 
+def _sqnorm(a):
+    return F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cos_expr(a, b):
     # zero-norm guard: hashed-TF can emit an all-zero (non-null) vector when
     # a doc's signed bucket counts cancel; an unguarded divide is a
     # DIVIDE_BY_ZERO job abort under Spark 4 ANSI (and a NaN that sorts
     # ABOVE every real cosine under desc with ANSI off). cos := -1.0 ranks
     # degenerate vectors last everywhere, which is the semantics every
     # caller (top-k desc, >= tau thresholds) wants.
-    denom = _n(a) * _n(b)
-    return F.when(denom > 0, dot / denom).otherwise(F.lit(-1.0))
+    denom = F.sqrt(_sqnorm(a)) * F.sqrt(_sqnorm(b))
+    return F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(-1.0))
 
 
 def embedding_capped_buckets(
@@ -229,8 +214,8 @@ def ann_topk_lsh(
     if cand.count() < k:
         cand = _cands(2).localCheckpoint(eager=False)
         if cand.count() < k:
-            # exact fallback: scan once (widened — see _widen)
-            cand = _widen(emb.select(id_col, emb_col))
+            # exact fallback: scan once, widened (textops._ensure_parallelism)
+            cand = _ensure_parallelism(emb.select(id_col, emb_col))
 
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
@@ -359,8 +344,8 @@ def ann_topk_ivf(
         .localCheckpoint(eager=False)
     )
     if cand.count() < k:
-        # probe everything: exact (widened — see _widen)
-        cand = _widen(assigned.select(id_col, emb_col))
+        # probe everything: exact, widened (textops._ensure_parallelism)
+        cand = _ensure_parallelism(assigned.select(id_col, emb_col))
     return _topk(cand)
 
 
@@ -485,7 +470,7 @@ def ann_topk_lsh_batch(
         if exact_q:
             qdf = spark.createDataFrame([(q,) for q in exact_q], "query_id long")
             exact = (
-                _widen(emb.select(id_col, emb_col))
+                _ensure_parallelism(emb.select(id_col, emb_col))
                 .crossJoin(F.broadcast(qdf))
                 .select("query_id", id_col, emb_col)
             )
@@ -542,7 +527,7 @@ def ann_topk_ivf_batch(
     if exact_q:
         qdf = spark.createDataFrame([(q,) for q in exact_q], "query_id long")
         exact = (
-            _widen(emb.select(id_col, emb_col))
+            _ensure_parallelism(emb.select(id_col, emb_col))
             .crossJoin(F.broadcast(qdf))
             .select("query_id", id_col, emb_col)
         )
