@@ -841,8 +841,8 @@ def main() -> None:
         vs verify join (B+C). The round-6 spread (3.3-5.9 s idle) was the
         old band SELF-join recomputing the signature on both sides — four
         corpus scans and a run-to-run broadcast/shuffle flap. The round-7
-        one-pass in-bucket expansion computes signatures once; see
-        bench/minhash_decompose.py for the multi-trial instrument."""
+        one-pass in-bucket expansion computes signatures once; the
+        multi-trial medians are recorded in BENCH/BASELINE.md."""
         try:
             from tiledspark.textops import _candidate_pair_frame
 

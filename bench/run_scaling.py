@@ -5,8 +5,8 @@ scaling efficiency >= 0.8 between N and 4N executors).
 N vs 4N EXECUTORS means separate executor JVM processes
 (local-cluster[1,6,8192] vs local-cluster[4,6,8192]; 8 GB per executor at BOTH sizes — the N=1 executor holds the entire doc cache and shuffle state, so 4 GB OOMs it) — single-JVM local[N]
 cannot evidence scaling in this sandbox: one process is capped at ~2.5-8
-effective cores regardless of thread count (measured,
-bench/cpu_ceiling_probe.py), while separate processes scale to 21+ cores.
+effective cores regardless of thread count, while separate processes scale
+to 21+ cores (measured; recorded in BENCH/BASELINE.md, "Why two corpora").
 
 Two corpora, one job, identical code:
 - PRIMARY (expr, 16M pages): input generated IN EXECUTORS by deterministic
@@ -393,7 +393,7 @@ def main() -> None:
         "This sandbox is ONE host: adding executor processes adds CPU (one",
         "process is capped at ~2.5-8 effective cores regardless of threads;",
         "separate processes scale past 21 effective cores — measured in",
-        "bench/cpu_ceiling_probe.py), but disk bandwidth is shared, so any",
+        "a round-4 CPU-ceiling probe), but disk bandwidth is shared, so any",
         "stage bound by the local parquet scan or shuffle I/O cannot scale",
         "with executor count no matter how the engine is built. On a real",
         "cluster each executor brings its own disks/NICs and object-store",

@@ -139,6 +139,7 @@ def main() -> None:
         ap.error("--quality-pos and --quality-neg must be given together")
 
     from tiledspark.dedup import exact_near_keepers
+    from tiledspark.lineage import checkpoint
     from tiledspark.textops import (
         hashed_tf_embedding,
         lang_id_expr,
@@ -182,32 +183,26 @@ def main() -> None:
     ok_stop = F.col("_stop_ratio") >= args.min_stop_ratio
     lang_list = [s for s in (args.langs or "").split(",") if s]
     ok_lang = F.col("_lang").isin(lang_list) if lang_list else F.lit(True)
-    # Every stage checkpoint in this job is LAZY (round 9, the knn/ann/
-    # minhash fusion pattern): each is immediately followed by a full-scan
-    # stats action (agg/count) that materializes the blocks inside the job
-    # it already runs — the eager-materialize-then-aggregate shape cost one
-    # extra action barrier per stage (the round-8 TIMELINE job-count term).
-    screened = screened.withColumn(
-        "_ok", ok_tokens & ok_avg & ok_max & ok_stop & ok_lang
-    ).localCheckpoint(eager=False)
-    reasons = screened.agg(
-        F.sum((~ok_tokens).cast("long")).alias("too_few_tokens"),
-        F.sum((ok_tokens & ~ok_avg).cast("long")).alias("avg_token_too_long"),
-        F.sum((ok_tokens & ok_avg & ~ok_max).cast("long")).alias("max_token_too_long"),
-        F.sum((ok_tokens & ok_avg & ok_max & ~ok_stop).cast("long")).alias("low_stop_ratio"),
-        F.sum((ok_tokens & ok_avg & ok_max & ok_stop & ~ok_lang).cast("long")).alias("lang_rejected"),
-    ).collect()[0].asDict()
+    # Each stage's stats come from the job that checkpoints it (lineage.checkpoint).
+    screened, reasons = checkpoint(
+        screened.withColumn("_ok", ok_tokens & ok_avg & ok_max & ok_stop & ok_lang),
+        too_few_tokens=F.sum((~ok_tokens).cast("long")),
+        avg_token_too_long=F.sum((ok_tokens & ~ok_avg).cast("long")),
+        max_token_too_long=F.sum((ok_tokens & ok_avg & ~ok_max).cast("long")),
+        low_stop_ratio=F.sum((ok_tokens & ok_avg & ok_max & ~ok_stop).cast("long")),
+        lang_rejected=F.sum((ok_tokens & ok_avg & ok_max & ok_stop & ~ok_lang).cast("long")),
+        n_quality=F.sum(F.col("_ok").cast("long")),
+    )
+    n_quality = reasons.pop("n_quality")
     docs = screened.where("_ok").drop(
         "_n_tokens", "_avg_tok", "_max_tok", "_stop_ratio", "_ok"
     ).withColumnRenamed("_lang", "lang_pred")
-    n_quality = docs.count()
 
     # 1b. optional repetition screens (Gopher rules) — run on gate survivors
     # only: the bigram signal costs one narrow (id, bigram) exchange, so it
     # comes after the cheap projection gate has already shed the junk
     rep_rejected = None
     if args.max_dup_line_frac is not None or args.max_top_bigram_frac is not None:
-        docs = repetition_stats(docs, id_col=idc, text_col=txt).localCheckpoint(eager=False)
         ok_line = (
             F.col("dup_line_char_frac") <= args.max_dup_line_frac
             if args.max_dup_line_frac is not None else F.lit(True)
@@ -216,22 +211,17 @@ def main() -> None:
             F.col("top_bigram_frac") <= args.max_top_bigram_frac
             if args.max_top_bigram_frac is not None else F.lit(True)
         )
-        rep_rejected = {
-            k: int(v or 0)
-            for k, v in docs.agg(
-                F.sum((~ok_line).cast("long")).alias("dup_line"),
-                F.sum((ok_line & ~ok_bg).cast("long")).alias("top_bigram"),
-            ).collect()[0].asDict().items()
-        }
+        docs, rep_rejected = checkpoint(
+            repetition_stats(docs, id_col=idc, text_col=txt),
+            dup_line=F.sum((~ok_line).cast("long")),
+            top_bigram=F.sum((ok_line & ~ok_bg).cast("long")),
+        )
         docs = docs.where(ok_line & ok_bg)
     # 1c. optional surprisal band screen (CCNet shape, unigram approximation
     # self-trained on the survivors; see textops for the swap-to-KenLM note)
     surprisal_rejected = None
     if args.min_mean_surprisal is not None or args.max_mean_surprisal is not None:
         ref = train_unigram_logprobs(docs, text_col=txt).localCheckpoint(eager=False)
-        docs = with_unigram_surprisal(
-            docs, ref, id_col=idc, text_col=txt
-        ).localCheckpoint(eager=False)
         ok_lo = (
             F.col("mean_surprisal") >= args.min_mean_surprisal
             if args.min_mean_surprisal is not None else F.lit(True)
@@ -240,13 +230,11 @@ def main() -> None:
             F.col("mean_surprisal") <= args.max_mean_surprisal
             if args.max_mean_surprisal is not None else F.lit(True)
         )
-        surprisal_rejected = {
-            k: int(v or 0)
-            for k, v in docs.agg(
-                F.sum((~ok_lo).cast("long")).alias("too_low"),
-                F.sum((ok_lo & ~ok_hi).cast("long")).alias("too_high"),
-            ).collect()[0].asDict().items()
-        }
+        docs, surprisal_rejected = checkpoint(
+            with_unigram_surprisal(docs, ref, id_col=idc, text_col=txt),
+            too_low=F.sum((~ok_lo).cast("long")),
+            too_high=F.sum((ok_lo & ~ok_hi).cast("long")),
+        )
         docs = docs.where(ok_lo & ok_hi)
 
     # 1d. optional eval-set decontamination (round 8, GPT-3/PaLM-shape):
@@ -262,7 +250,7 @@ def main() -> None:
         eval_df = spark.read.parquet(args.decontam_eval)
         # materialize the (tiny) flagged set, THEN anti-join: the corpus
         # n-gram scan runs exactly once (the semdedup-stage structure)
-        flagged = (
+        flagged, c = checkpoint(
             contamination_hits(
                 docs,
                 eval_df,
@@ -274,10 +262,10 @@ def main() -> None:
             )
             .where(F.col("n_hits") >= args.decontam_min_hits)
             .select(idc)
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
-        n_decontam_dropped = flagged.count()
+        n_decontam_dropped = c["n"]
         if n_decontam_dropped:
             docs = docs.join(flagged, idc, "left_anti")
 
@@ -328,8 +316,8 @@ def main() -> None:
         # The semi-join also sheds docs the embedding path produced no
         # score row for (token-less text) — count the stage's drop as
         # before-minus-after so those are attributed here, not to dedup.
-        keep_ids = kept_scores.select(idc).localCheckpoint(eager=False)
-        n_quality_clf_dropped = n_screened - keep_ids.count()
+        keep_ids, c = checkpoint(kept_scores.select(idc), n=F.count(F.lit(1)))
+        n_quality_clf_dropped = n_screened - c["n"]
         if n_quality_clf_dropped:
             docs = docs.join(keep_ids, idc, "left_semi")
 
@@ -366,14 +354,17 @@ def main() -> None:
             raise SystemExit("--semdedup-min-cos requires embeddings (drop --no-embed)")
         from tiledspark.vector import semdedup_drop_ids
 
-        drops = semdedup_drop_ids(
-            spark,
-            kept.where(F.col("embedding").isNotNull()).select(idc, "embedding"),
-            min_cos=args.semdedup_min_cos,
-            k=args.semdedup_k,
-            id_col=idc,
-        ).localCheckpoint(eager=False)
-        n_semantic_dropped = drops.count()
+        drops, c = checkpoint(
+            semdedup_drop_ids(
+                spark,
+                kept.where(F.col("embedding").isNotNull()).select(idc, "embedding"),
+                min_cos=args.semdedup_min_cos,
+                k=args.semdedup_k,
+                id_col=idc,
+            ),
+            n=F.count(F.lit(1)),
+        )
+        n_semantic_dropped = c["n"]
         if n_semantic_dropped:
             kept = kept.join(drops, idc, "left_anti")
         n_kept -= n_semantic_dropped
@@ -382,23 +373,19 @@ def main() -> None:
     # the original text rides through untouched — byte-identity invariant)
     pii_counts = None
     if args.scrub_pii:
-        kept = scrub_pii(kept, text_col=args.text_col)
-        kept = kept.localCheckpoint(eager=False)
-        pii_counts = {
-            k: int(v or 0)
-            for k, v in kept.agg(
-                F.sum("n_pii_email").alias("email"),
-                F.sum("n_pii_ipv4").alias("ipv4"),
-                F.sum("n_pii_phone").alias("phone"),
-            ).collect()[0].asDict().items()
-        }
+        kept, pii_counts = checkpoint(
+            scrub_pii(kept, text_col=args.text_col),
+            email=F.sum("n_pii_email"),
+            ipv4=F.sum("n_pii_ipv4"),
+            phone=F.sum("n_pii_phone"),
+        )
 
     kept.write.mode("overwrite").parquet(args.out)
     print(
         json.dumps(
             {
                 "n_docs": n_docs,
-                "quality_rejected": {k: int(v or 0) for k, v in reasons.items()},
+                "quality_rejected": reasons,
                 "n_after_quality": n_quality,
                 "repetition_rejected": rep_rejected,
                 "surprisal_rejected": surprisal_rejected,

@@ -4,7 +4,8 @@ and streaming.stream_near_dedupe."""
 
 from __future__ import annotations
 
-from tiledspark.dedup import anchored_keepers, jaccard_gate
+import tiledspark.dedup as dedup
+from tiledspark.dedup import anchored_keepers, exact_near_keepers, jaccard_gate
 
 
 def _docs(spark, ids):
@@ -19,6 +20,10 @@ def _pairs(spark, edges):
 
 def _ids(df):
     return {r["doc_id"] for r in df.collect()}
+
+
+def _group_jobs(sc, group):
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_jaccard_gate_keeps_pairs_at_or_above_threshold(spark):
@@ -66,3 +71,55 @@ def test_anchored_keepers_zero_pairs_runs_no_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert kept is new and labels is None
     assert (n_vs_base, n_within) == (0, 0)
+
+
+def test_exact_near_keepers_zero_pairs_skips_connected_components(spark, monkeypatch):
+    """A corpus with one exact duplicate and no near-dups: the stats count
+    the exact drop only, and once the gate finds zero pairs the call runs
+    no more jobs than a plain count of the docs (no connected components)."""
+    sc = spark.sparkContext
+    texts = {
+        1: "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
+        2: "kilo lima mike november oscar papa quebec romeo sierra tango",
+        3: "uniform victor whiskey xray yankee zulu one two three four",
+        4: "kilo lima mike november oscar papa quebec romeo sierra tango",
+        5: "red orange yellow green blue indigo violet black white grey",
+    }
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    group = "exact-near-keepers-zero-pairs"
+    at_gate = []
+
+    def gate(cand, min_jaccard):
+        out = jaccard_gate(cand, min_jaccard)
+        at_gate.append(_group_jobs(sc, group))
+        return out
+
+    monkeypatch.setattr(dedup, "jaccard_gate", gate)
+    sc.setJobGroup(group, "dedup core on a corpus without near-dups")
+    try:
+        kept, text_col, stats = exact_near_keepers(
+            docs, 5, "doc_id", "text", min_jaccard=0.5, est_threshold=0.2,
+            cc_impl="propagate", boilerplate_max_df=None,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    after_gate = _group_jobs(sc, group) - at_gate[0]
+
+    assert text_col == "text"
+    assert stats == {
+        "n_boiler_lines_dropped": 0,
+        "n_exact_dropped": 1,
+        "n_near_pairs": 0,
+        "n_components": 0,
+        "n_near_dropped": 0,
+        "n_kept": 4,
+    }
+    assert _ids(kept) == {1, 2, 3, 5}
+
+    plain = "plain-count-of-docs"
+    sc.setJobGroup(plain, "count the docs")
+    try:
+        docs.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after_gate <= _group_jobs(sc, plain)

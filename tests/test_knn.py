@@ -132,6 +132,17 @@ def test_knn_self_join_matches_bruteforce(spark):
         assert row["url"] == urls[b] and row["dist_m"] == 0.0
 
 
+def test_knn_empty_queries_return_empty_frame_with_output_schema(spark):
+    """0 queries -> 0 rows with the same columns and types as a call that
+    finds neighbors."""
+    docs, queries = _knn_cache_inputs(spark)
+    got = knn_cell_ring(spark, docs, queries.limit(0), k=3, max_radius=8)
+    assert got.columns == ["query_id", "rank", "url", "dist_m"]
+    assert got.collect() == []
+    want = knn_cell_ring(spark, docs, queries, k=3, max_radius=8)
+    assert got.dtypes == want.dtypes
+
+
 def _settled_persistent_rdds(spark, floor=None, timeout_s=30.0):
     """Persistent-RDD count once unreachable local checkpoints are cleaned.
 

@@ -2,7 +2,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tiledspark.lineage import observed, partition_lineage, with_partition_stamp
+from tiledspark.lineage import (
+    checkpoint,
+    observed,
+    partition_lineage,
+    with_partition_stamp,
+)
+
+
+def _jobs_in_group(sc, group, fn):
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_observed_counts(spark, sf_dir):
@@ -10,6 +24,42 @@ def test_observed_counts(spark, sf_dir):
     out, obs = observed(df.where(F.col("o_totalprice") > 0))
     n = out.count()
     assert obs.get["rows"] == n > 0
+
+
+def test_checkpoint_scalars_equal_count_and_agg(spark):
+    df = spark.range(200).where(F.col("id") % 3 != 0).repartition(4)
+    out, c = checkpoint(
+        df,
+        n=F.count(F.lit(1)),
+        total=F.sum("id"),
+        big=F.sum((F.col("id") > 100).cast("int")),
+    )
+    want = df.agg(
+        F.sum("id").alias("total"), F.sum((F.col("id") > 100).cast("int")).alias("big")
+    ).collect()[0]
+    assert c == {"n": df.count(), "total": want["total"], "big": want["big"]}
+    assert out.count() == c["n"]
+    assert sorted(r["id"] for r in out.collect()) == sorted(r["id"] for r in df.collect())
+
+
+def test_checkpoint_empty_input_reads_zero(spark):
+    df = spark.range(50).where(F.col("id") < 0)
+    out, c = checkpoint(df, n=F.count(F.lit(1)), total=F.sum("id"))
+    assert c == {"n": 0, "total": 0}
+    assert out.collect() == []
+
+
+def test_checkpoint_scalars_add_no_job(spark):
+    """Reading the scalars costs no job beyond the checkpoint itself: the
+    same job count as a bare eager localCheckpoint of the same frame."""
+    sc = spark.sparkContext
+    df = spark.range(1000).repartition(4).where(F.col("id") % 7 == 0)
+    _, bare = _jobs_in_group(sc, "bare-local-checkpoint", lambda: df.localCheckpoint())
+    (_, c), gated = _jobs_in_group(
+        sc, "checkpoint-helper", lambda: checkpoint(df, n=F.count(F.lit(1)))
+    )
+    assert c["n"] == 143
+    assert bare >= 1 and gated == bare
 
 
 def test_partition_stamp_and_lineage(spark, sf_dir):

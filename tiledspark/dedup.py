@@ -7,30 +7,26 @@ already-deduped history.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tiledspark.graph import connected_components, dedup_keepers_with_labels
+from tiledspark.lineage import checkpoint
 from tiledspark.textops import drop_boilerplate_lines, lsh_candidate_pairs
 
 
 def jaccard_gate(cand: DataFrame, min_jaccard: float) -> tuple[DataFrame, int]:
     """Candidate pairs (id_a, id_b, n_inter, n_union) -> (pairs, n_pairs):
     the (id_a, id_b) pairs at exact shingle Jaccard >= min_jaccard, behind a
-    localCheckpoint. The pair count is an observe() metric of the job that
-    materializes the checkpoint: a separate count() would add an aggregate
-    stage, i.e. one more job under AQE."""
-    obs = Observation()
-    pairs = (
+    checkpoint."""
+    pairs, c = checkpoint(
         cand.where(
             F.col("n_inter").cast("double")
             >= F.lit(min_jaccard) * F.col("n_union").cast("double")
-        )
-        .select("id_a", "id_b")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        ).select("id_a", "id_b"),
+        n=F.count(F.lit(1)),
     )
-    return pairs, int(obs.get["n"])
+    return pairs, c["n"]
 
 
 def exact_near_keepers(
@@ -53,10 +49,13 @@ def exact_near_keepers(
     of the keeper run also give n_components, so CC runs once."""
     n_boiler_lines = 0
     if boilerplate_max_df is not None:
-        docs = drop_boilerplate_lines(
-            docs, id_col=id_col, text_col=text_col, max_df=boilerplate_max_df
-        ).localCheckpoint(eager=False)
-        n_boiler_lines = int(docs.agg(F.sum("n_lines_dropped")).collect()[0][0] or 0)
+        docs, c = checkpoint(
+            drop_boilerplate_lines(
+                docs, id_col=id_col, text_col=text_col, max_df=boilerplate_max_df
+            ),
+            n=F.sum("n_lines_dropped"),
+        )
+        n_boiler_lines = c["n"]
         text_col = "text_clean"
 
     fp = docs.select(F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("fp"))
@@ -68,14 +67,17 @@ def exact_near_keepers(
         exact_docs, id_col, text_col=text_col, est_threshold=est_threshold
     )
     pairs, n_pairs = jaccard_gate(cand, min_jaccard)
-    kept, labels = dedup_keepers_with_labels(exact_docs, pairs, id_col, impl=cc_impl)
-    kept = kept.localCheckpoint(eager=False)
-    n_kept = kept.count()
+    kept, n_kept, n_components = exact_docs, n_exact, 0
+    if n_pairs:
+        kept, labels = dedup_keepers_with_labels(exact_docs, pairs, id_col, impl=cc_impl)
+        kept, c = checkpoint(kept, n=F.count(F.lit(1)))
+        n_kept = c["n"]
+        n_components = labels.select("comp").distinct().count()
     return kept, text_col, {
         "n_boiler_lines_dropped": n_boiler_lines,
         "n_exact_dropped": n_docs - n_exact,
         "n_near_pairs": n_pairs,
-        "n_components": labels.select("comp").distinct().count() if n_pairs else 0,
+        "n_components": n_components,
         "n_near_dropped": n_exact - n_kept,
         "n_kept": n_kept,
     }
@@ -105,17 +107,14 @@ def anchored_keepers(
     floating = lab_new.join(anchored, "comp", "left_anti")
     keep_floating = floating.groupBy("comp").agg(F.min("id").alias("id"))
     drop_within = floating.join(keep_floating, "id", "left_anti").select("id")
-    dropped = (
-        drop_vs_base.withColumn("_vs_base", F.lit(True))
-        .unionByName(drop_within.withColumn("_vs_base", F.lit(False)))
-        .localCheckpoint(eager=False)
+    dropped, c = checkpoint(
+        drop_vs_base.withColumn("_vs_base", F.lit(True)).unionByName(
+            drop_within.withColumn("_vs_base", F.lit(False))
+        ),
+        n_base=F.sum(F.col("_vs_base").cast("int")),
+        n_all=F.count(F.lit(1)),
     )
-    cnt = dropped.agg(
-        F.sum(F.col("_vs_base").cast("int")).alias("n_base"),
-        F.count(F.lit(1)).alias("n_all"),
-    ).collect()[0]
-    n_base = int(cnt["n_base"] or 0)
     kept = new_docs.join(
         dropped.select(F.col("id").alias(id_col)), id_col, "left_anti"
     ).localCheckpoint(eager=False)
-    return kept, labels, n_base, int(cnt["n_all"]) - n_base
+    return kept, labels, c["n_base"], c["n_all"] - c["n_base"]

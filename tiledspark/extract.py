@@ -34,7 +34,7 @@ def extract_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
     ops (3 separate regexp evals measured ~3x the scan cost at 4M rows —
     java.util.regex dominates this stage's CPU).
 
-    Tried and REVERTED (round 6, bench/extract_ab_probe.py): replacing the
+    Tried and REVERTED (round 6 A/B): replacing the
     full-text regex scan with locate("geo:") + an anchored 32-char-window
     validation (full-regex fallback for decoy prefixes). Exact parity held
     (tests/test_tiles.py::test_extract_coords_decoy_parity pins the

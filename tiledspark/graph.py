@@ -15,10 +15,10 @@ shallow by construction (duplicates of a common source connect through it:
 diameter ~2-4), so the loop is a handful of rounds even at 10^12 docs.
 Spark shape per round: ONE join of the (src, dst) edge list against the
 (id, comp) label table on dst + a min-aggregate on src — both shuffles are
-narrow (two longs per row). Labels are localCheckpoint-ed each round to
-truncate lineage (the relations.py semi-naive fixpoint pattern), and the
-convergence probe rides the SAME aggregate that computes the new labels
-(observe() metric), so each round is exactly one job.
+narrow (two longs per row). Labels are checkpointed each round to truncate
+lineage (the relations.py semi-naive fixpoint pattern), and the convergence
+probe rides the job that materializes them (lineage.checkpoint), so each
+round is exactly one job.
 
 For adversarially deep graphs (long chains) use
 `connected_components_star` — the alternating large-star/small-star
@@ -32,8 +32,10 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tiledspark.lineage import checkpoint
 
 
 class ConvergenceWarning(UserWarning):
@@ -72,23 +74,18 @@ def connected_components(
             .agg(F.min("nc").alias("nbc"))
             .select(F.col("s").alias("id"), "nbc")
         )
-        obs = Observation()
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
+        labels, c = checkpoint(
+            labels.join(nbr_min, "id", "left").select(
                 "id",
                 F.least(F.col("comp"), F.coalesce(F.col("nbc"), F.col("comp"))).alias(
                     "comp"
                 ),
                 (F.col("nbc") < F.col("comp")).cast("int").alias("_chg"),
-            )
-            .observe(obs, F.sum("_chg").alias("changed"))
-            .drop("_chg")
+            ),
+            changed=F.sum("_chg"),
         )
-        # localCheckpoint materializes the round (truncating lineage) AND
-        # fires the observation — one job per round, no separate count()
-        labels = new_labels.localCheckpoint()
-        changed = int(obs.get["changed"] or 0)
+        labels = labels.drop("_chg")
+        changed = c["changed"]
         if not changed:
             break
     if changed:
@@ -167,32 +164,26 @@ def connected_components_star(
     Spark shape per half-round: one symmetric-close + groupBy-min on one
     long key + an equi-join shipping two longs per row — the same narrow
     exchange discipline as the simple propagation (no document payloads,
-    no wide rows). Edge frames are localCheckpoint-ed every round to
-    truncate lineage; the convergence probe (edge set unchanged, checked
-    as count + order-invariant hash-sum) rides the checkpoint job itself
-    as observe() metrics — no extra pass per round.
+    no wide rows). Edge frames are checkpointed every round to truncate
+    lineage; the convergence probe (edge set unchanged, checked as count +
+    order-invariant hash-sum) rides the checkpoint job itself
+    (lineage.checkpoint) — no extra pass per round.
 
     Determinism: both operators map each node to a neighborhood MINIMUM —
     no tie-breaks exist, so the fixpoint is unique and input-order-free.
     """
     def _ckpt_with_sig(df: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-        # the convergence signature (edge count + order-invariant hash-sum)
-        # rides the SAME job that materializes the checkpoint — observe()
-        # metrics, no separate agg pass (the connected_components pattern)
-        obs = Observation()
-        # sum the 64-bit hashes in decimal(38,0): ANSI long-sum overflows
+        # convergence signature: edge count + order-invariant hash-sum.
+        # Sum the 64-bit hashes in decimal(38,0): ANSI long-sum overflows
         # (random-sign hashes WILL exceed +/-2^63 transiently), while a
         # 38-digit accumulator over 19-digit terms is overflow-free for
         # any corpus this engine will ever see
-        out = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).localCheckpoint()
-        return out, (int(obs.get["n"] or 0), int(obs.get["h"] or 0))
+        out, c = checkpoint(
+            df,
+            n=F.count(F.lit(1)),
+            h=F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+        )
+        return out, (c["n"], c["h"])
 
     # canonical (hi, lo) orientation, self-loops dropped
     e, sig = _ckpt_with_sig(

@@ -1,9 +1,12 @@
 """Runtime lineage & row-count metrics (SURVEY.md op 24).
 
-Two complementary mechanisms:
+Three mechanisms:
 - `observed(df, name)`: zero-cost row/byte counters via df.observe — the
   numbers ride the existing job (no extra action) and are collected from the
   Observation after the consuming action finishes.
+- `checkpoint(df, **metrics)`: the engine's one "checkpoint, then read a
+  scalar off it" gate — the scalars ride the job that materializes the
+  checkpoint.
 - `with_partition_stamp(df)`: mapInArrow pass stamping each row with its
   physical partition id + per-partition row position, for per-partition
   lineage rows (written alongside snapshot manifests by SnapshotStore).
@@ -17,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -30,6 +33,19 @@ def observed(df: DataFrame, name: str = "lineage") -> tuple[DataFrame, Observati
         F.sum(F.length(F.col(df.columns[0]).cast("string"))).alias("first_col_chars"),
     )
     return out, obs
+
+
+def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict[str, int]]:
+    """Eager localCheckpoint of df -> (checkpointed frame, {name: scalar}),
+    each named aggregate Column evaluated over df's rows, null read as 0.
+
+    The scalars are observe() metrics of the one job that materializes the
+    checkpoint. A count() or agg() over a lazy checkpoint would run its
+    aggregate exchange as a second job (one more map stage under AQE)."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).localCheckpoint()
+    got = obs.get
+    return out, {k: int(got[k] or 0) for k in metrics}
 
 
 def with_partition_stamp(df: DataFrame) -> DataFrame:

@@ -17,8 +17,8 @@ tiles. The loop is datalog-style semi-naive evaluation:
 
 Scale shape: each round is ONE equi-join (edges ⋈ delta on child rel_id) +
 one left_anti dedupe against the assigned set — both shuffle on rel_id/tile
-pairs only (never payloads). Both `assigned` and `delta` are eagerly
-localCheckpoint'ed per round, so round t's plan never re-derives rounds
+pairs only (never payloads). Both `assigned` and `delta` are
+checkpointed per round, so round t's plan never re-derives rounds
 0..t-1 (the same quadratic-lineage fix as the kNN loop). Semi-naive matters:
 joining the full assigned set every round would rediscover every pair every
 time; joining only the delta keeps per-round work proportional to NEW facts,
@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tiledspark.lineage import checkpoint
 
 
 def assign_relations_to_tiles(
@@ -73,15 +75,13 @@ def assign_relations_to_tiles(
             .select("rel_id", "tile_id")
             .distinct()
         )
-        # ONE job per round (round 9, the knn/ann fusion pattern): the lazy
-        # delta checkpoint is materialized by its count() gate — and that
-        # same job computes the previous round's lazy `assigned` union
-        # (referenced once upstream, via the anti-join), so the separate
-        # eager-materialize job per checkpoint is gone. 3 jobs/round -> 1.
-        delta = new_pairs.join(
-            assigned, ["rel_id", "tile_id"], "left_anti"
-        ).localCheckpoint(eager=False)
-        if delta.count() == 0:
+        # one job per round: the delta checkpoint's gate also computes the
+        # previous round's lazy `assigned` union (read once, via the anti-join)
+        delta, c = checkpoint(
+            new_pairs.join(assigned, ["rel_id", "tile_id"], "left_anti"),
+            n=F.count(F.lit(1)),
+        )
+        if not c["n"]:
             return assigned
         assigned = assigned.unionByName(delta).localCheckpoint(eager=False)
     raise RuntimeError(

@@ -264,6 +264,7 @@ def stream_near_dedupe(
     import os
 
     from tiledspark.dedup import anchored_keepers, jaccard_gate
+    from tiledspark.lineage import checkpoint
     from tiledspark.textops import (
         band_signatures,
         lsh_candidate_pairs,
@@ -276,21 +277,16 @@ def stream_near_dedupe(
         return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
 
     def _dedupe_batch(batch_df: DataFrame, batch_id: int):
-        # lazy checkpoints throughout (round 9, the knn/ann/minhash fusion
-        # pattern): every checkpoint below is immediately followed by a
-        # full-scan stats action (count/agg) that materializes its blocks in
-        # the SAME job — the eager-materialize-then-count shape cost one
-        # extra job barrier per checkpoint per micro-batch
-        batch_df = batch_df.localCheckpoint(eager=False)
-        n_in = batch_df.count()
+        batch_df, c = checkpoint(batch_df, n=F.count(F.lit(1)))
+        n_in = c["n"]
         n_replay = 0
         if _has_parquet(sig_dir):
             sigs = spark.read.parquet(sig_dir)
             seen_ids = sigs.select(id_col).dropDuplicates([id_col])
-            fresh = batch_df.join(seen_ids, id_col, "left_anti").localCheckpoint(
-                eager=False
+            fresh, c = checkpoint(
+                batch_df.join(seen_ids, id_col, "left_anti"), n=F.count(F.lit(1))
             )
-            n_replay = n_in - fresh.count()
+            n_replay = n_in - c["n"]
             cand = lsh_candidate_pairs_incremental(
                 fresh, spark.read.parquet(out_dir), id_col, text_col=text_col,
                 base_banded=sigs,

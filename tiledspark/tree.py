@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tiledspark import tiles
+from tiledspark.lineage import checkpoint
 from tiledspark.tiles import MAX_DOCS_PER_TILE, Z_BASE, Z_MAX
 
 
@@ -55,18 +56,14 @@ def tile_counts_all_zooms(
     (exhaustive mode — used by tests that want the full pyramid).
     """
     docs = doc_points.where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-    base = (
+    # checkpointed once: three consumers (ancestor rollup, the split-id
+    # broadcast, the deep-docs join) would otherwise each re-run the
+    # doc-scale groupBy; the checkpoint is O(base tiles), never O(docs).
+    base, c = checkpoint(
         docs.withColumn("tile_id", tiles.tile_id_expr(F.col("lon"), F.col("lat"), z_base))
         .groupBy("tile_id")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        # materialize once: three consumers (ancestor rollup, the split-id
-        # broadcast, the deep-docs join) would otherwise each re-run the
-        # doc-scale groupBy; the checkpoint is O(base tiles), never O(docs).
-        # Lazy (round 9): the splittable-count gate below materializes the
-        # blocks inside its own job — eager + take(1) was two driver
-        # barriers for one doc-scale pass; the exhaustive max_docs=None path
-        # (no gate job) materializes eagerly as before.
-        .localCheckpoint(eager=(max_docs is None or z_max <= z_base))
+        .agg(F.count(F.lit(1)).alias("doc_count")),
+        n_split=F.sum((F.col("doc_count") > F.lit(max_docs)).cast("int")),
     )
     up = base.select(
         F.explode(
@@ -81,12 +78,9 @@ def tile_counts_all_zooms(
         )
         # Short-circuit (round 4): when NO base tile exceeds max_docs the
         # deep branch is a guaranteed-empty full pass over the docs (join
-        # against an empty broadcast). Round 9: the gate is a count() over
-        # the LAZY base checkpoint — the same job computes the doc-scale
-        # aggregate, stores every checkpoint block (count scans all
-        # partitions, unlike take(1)), and returns the gate scalar; at
-        # planet scale splittable tiles exist and the branch runs.
-        if max_docs is not None and splittable.count() == 0:
+        # against an empty broadcast); at planet scale splittable tiles
+        # exist and the branch runs.
+        if max_docs is not None and not c["n_split"]:
             z0, _, _ = tiles.tile_unpack_exprs(F.col("tile_id"))
             return up.withColumn("zoom", z0)
         split_ids = splittable.select(F.col("tile_id").alias("_split_base"))

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tiledspark.lineage import checkpoint
 from tiledspark.textops import _ensure_parallelism
 
 LSH_SEED = 424242
@@ -174,8 +175,8 @@ def ann_topk_lsh(
     silently return fewer than k rows. CORRECTNESS_r03 recorded 0 rows for
     the sf0.01 uniform corpus — 8 tables x 17 probes at 2^-16 collision
     probability over ~10^3 random vectors yields an empty candidate set. Now
-    the candidate set is materialized once (localCheckpoint — also flattens
-    the bucketing UDF out of the scoring plan) and counted; if it holds fewer
+    the candidate set is checkpointed once (which also flattens the
+    bucketing UDF out of the scoring plan) and counted; if it holds fewer
     than k ids the call escalates to 2-bit multiprobe, then to an exact
     brute-force scan. At web scale the escalation is the rare path (buckets
     are population-sized); correctness never depends on it being rare."""
@@ -207,13 +208,10 @@ def ann_topk_lsh(
             .select(id_col, emb_col)
         )
 
-    # lazy checkpoint + count (round 9, guide §1/§2.6): the count job itself
-    # materializes every checkpoint partition, so each escalation gate costs
-    # ONE job instead of the eager-materialize-then-count two
-    cand = _cands(multiprobe).localCheckpoint(eager=False)
-    if cand.count() < k:
-        cand = _cands(2).localCheckpoint(eager=False)
-        if cand.count() < k:
+    cand, c = checkpoint(_cands(multiprobe), n=F.count(F.lit(1)))
+    if c["n"] < k:
+        cand, c = checkpoint(_cands(2), n=F.count(F.lit(1)))
+        if c["n"] < k:
             # exact fallback: scan once, widened (textops._ensure_parallelism)
             cand = _ensure_parallelism(emb.select(id_col, emb_col))
 
@@ -337,13 +335,11 @@ def ann_topk_ivf(
             .limit(k)
         )
 
-    cand = (
-        assigned.where(F.col("centroid_id").isin(probe_ids))
-        .select(id_col, emb_col)
-        # lazy: the count gate below materializes it in the same job
-        .localCheckpoint(eager=False)
+    cand, c = checkpoint(
+        assigned.where(F.col("centroid_id").isin(probe_ids)).select(id_col, emb_col),
+        n=F.count(F.lit(1)),
     )
-    if cand.count() < k:
+    if c["n"] < k:
         # probe everything: exact, widened (textops._ensure_parallelism)
         cand = _ensure_parallelism(assigned.select(id_col, emb_col))
     return _topk(cand)
@@ -351,7 +347,7 @@ def ann_topk_ivf(
 
 # --- batched N-query ANN (round 5, VERDICT r4 #6) ----------------------------
 #
-# The single-query APIs above pay one (or two) blocking count() jobs per call
+# The single-query APIs above pay one (or two) blocking gate jobs per call
 # for the guaranteed-k escalation — fine for analytical use, wasteful for a
 # multi-query workload. These variants take N queries at once and resolve the
 # escalation for ALL of them with ONE candidate job + ONE count job per
