@@ -913,9 +913,11 @@ def main() -> None:
                 .collect()
             )
             tot = sum(float(r["w"]) for r in achieved_rows) or 1.0
+            achieved = {r["source"]: float(r["w"]) / tot for r in achieved_rows}
+            # every domain on either side: one that got no tokens counts as 0
             max_dev = max(
-                abs(float(r["w"]) / tot - expected.get(r["source"], 0.0))
-                for r in achieved_rows
+                abs(achieved.get(d, 0.0) - expected.get(d, 0.0))
+                for d in achieved.keys() | expected.keys()
             )
             asg.unpersist()
             return {

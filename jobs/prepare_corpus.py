@@ -221,6 +221,7 @@ def main() -> None:
     # self-trained on the survivors; see textops for the swap-to-KenLM note)
     surprisal_rejected = None
     if args.min_mean_surprisal is not None or args.max_mean_surprisal is not None:
+        # ref is read twice (floor min, broadcast join): checkpoint so it trains once
         ref = train_unigram_logprobs(docs, text_col=txt).localCheckpoint(eager=False)
         ok_lo = (
             F.col("mean_surprisal") >= args.min_mean_surprisal

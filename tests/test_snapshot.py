@@ -58,8 +58,19 @@ def test_apply_diff_copy_on_write_and_moves(spark, pages_path, store):
         ).otherwise(F.lit(0)),
     ).select("url", "warc_ts", "text", "lang", "lat", "lon", "tile_id", "op")
 
+    # the diff must exercise both index lookups: a row that moves to another
+    # bucket, and a delete of a row the base holds
+    base_tile = {r["url"]: r["tile_id"] for r in df.select("url", "tile_id").collect()}
+    moved = [
+        r["url"]
+        for r in delta.where(F.col("op") == "upsert").select("url", "tile_id").collect()
+        if r["url"] in base_tile and base_tile[r["url"]] % 8 != r["tile_id"] % 8
+    ]
+    assert moved, "the diff moves no row between buckets"
+
     sid2 = store.apply_diff(spark, delta, row_key="url", key_col="tile_id")
     m2 = store.manifest(sid2)
+    assert not m2["diff"]["index_missing_full_rewrite"]
     # copy-on-write: some base files carried by reference
     carried = {f["path"] for f in m2["files"]} & {f["path"] for f in base_m["files"]}
     assert m2["diff"]["n_carried_files"] == len(carried)
@@ -69,6 +80,7 @@ def test_apply_diff_copy_on_write_and_moves(spark, pages_path, store):
     deleted = {r["url"] for r in raw_rows if r["op"] == "delete"}
     upserted = {r["url"]: r["text"] for r in raw_rows if r["op"] == "upsert"}
     got_urls = {r["url"] for r in after.select("url").distinct().collect()}
+    assert (deleted - set(upserted)) & set(base_tile), "the diff deletes no base row"
     assert not (deleted - set(upserted)) & got_urls, "deleted urls survived"
     # upserts present exactly once with the NEW text (byte-identical invariant)
     up = after.where(F.col("url").isin(list(upserted)[:50])).collect()
@@ -86,7 +98,7 @@ def test_apply_diff_copy_on_write_and_moves(spark, pages_path, store):
     }
     assert m2["diff"]["n_carried_index_files"] == len(carried_idx)
     # and the carried+rewritten index still resolves a MOVED row's new bucket
-    moved_url = next(iter(upserted))
+    moved_url = moved[0]
     hit = store.get_by_key(spark, moved_url).collect()
     assert len(hit) == 1 and hit[0]["text"] == upserted[moved_url]
     # time travel: snapshot 1 still shows the pre-diff state
@@ -241,43 +253,32 @@ def test_point_lookup_numeric_bigint_key(spark, tmp_path):
         assert len(rows) == 1 and rows[0]["text"] == f"payload-{key}"
 
 
-def test_find_tag_miss_authoritative_and_legacy_backfill(spark, tmp_path):
-    """ADVICE r3: tags.json must be authoritative for MISSES (the streaming
-    idempotence probe misses on every normal batch) — fresh stores seed it at
-    creation; legacy stores (no tags.json) get one scan + backfill, after
-    which misses never rescan the manifest list."""
+def test_find_tag_reads_only_tags_json(spark, tmp_path, monkeypatch):
+    """tags.json is the only record of tags: a missing file means no tags,
+    and neither a hit nor a miss opens a manifest (the streaming idempotence
+    probe misses on every normal batch, so a miss must stay one small-file
+    read, ADVICE r3)."""
     root = str(tmp_path / "tstore")
     store = SnapshotStore(root, n_buckets=4)
-    assert os.path.exists(os.path.join(root, "tags.json")), "seeded at creation"
+    assert store.find_tag("t1") is None, "a store with no tags.json has no tags"
     df = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") % 3).alias("tile_id")
     )
     s1 = store.commit(df, key_col="tile_id", tag="t1")
-    store.commit(df, key_col="tile_id", tag="t2")
+    s2 = store.commit(df, key_col="tile_id", tag="t2")
+    store.commit(df, key_col="tile_id", tag="t1")  # the first snapshot wins
     assert store.find_tag("t1") == s1
+    assert store.find_tag("t2") == s2
     assert store.find_tag("never-written") is None
 
-    # legacy store: drop tags.json, then a MISS must backfill it once
-    os.remove(os.path.join(root, "tags.json"))
-    legacy = SnapshotStore(root, n_buckets=4)  # reopen: must NOT re-seed empty
-    assert not os.path.exists(os.path.join(root, "tags.json"))
-    assert legacy.find_tag("never-written") is None
-    assert os.path.exists(os.path.join(root, "tags.json")), "backfilled on miss"
-    import json as _json
+    def _no_manifests(*a, **k):
+        raise AssertionError("find_tag must not open the manifest list")
 
-    with open(os.path.join(root, "tags.json")) as f:
-        assert _json.load(f) == {"t1": 1, "t2": 2, "__complete__": True}
-    assert legacy.find_tag("t1") == s1
-
-    # PARTIAL tags.json (round-4 review finding): a marker-less file written
-    # by an older build's record-on-commit path must NOT be authoritative
-    # for misses — the scan must still find tags it is missing
-    with open(os.path.join(root, "tags.json"), "w") as f:
-        _json.dump({"t2": 2}, f)  # t1 missing, no __complete__ marker
-    partial = SnapshotStore(root, n_buckets=4)
-    assert partial.find_tag("t1") == s1, "partial tags.json lost a real tag"
-    with open(os.path.join(root, "tags.json")) as f:
-        assert _json.load(f).get("__complete__") is True, "backfill must mark complete"
+    monkeypatch.setattr(SnapshotStore, "manifest", _no_manifests)
+    monkeypatch.setattr(SnapshotStore, "snapshots", _no_manifests)
+    reopened = SnapshotStore(root, n_buckets=4)
+    assert reopened.find_tag("t1") == s1
+    assert reopened.find_tag("never-written") is None
 
 
 def test_apply_diff_rejects_bucket_count_mismatch(spark, tmp_path):
@@ -303,56 +304,35 @@ def test_apply_diff_rejects_bucket_count_mismatch(spark, tmp_path):
     assert right.manifest(sid)["diff"]["n_carried_files"] > 0
 
 
-def test_apply_diff_legacy_monolithic_index(spark, tmp_path):
-    """ADVICE r3: a legacy manifest carries index_path (one monolithic index
-    dir), not index_files. apply_diff must USE it for the old-bucket lookup —
-    not degrade to index_missing_full_rewrite — and upgrade it to the
-    ibucket-partitioned form; tiles_for_key must serve from it unpruned."""
-    import json as _json
-
-    root = str(tmp_path / "lstore")
-    store = SnapshotStore(root, n_buckets=8)
+def test_apply_diff_without_index_rewrites_every_bucket(spark, tmp_path):
+    """A base committed without index_key cannot say which bucket a moved or
+    deleted row lived in, so apply_diff treats every base partition as
+    affected (round-1 fix) and records it. This is also the branch a store
+    in any older index format takes."""
+    store = SnapshotStore(str(tmp_path / "nistore"), n_buckets=8)
     df = spark.range(400).select(
         F.concat(F.lit("u"), F.col("id")).alias("url"),
         (F.col("id") % 29).alias("tile_id"),
         F.concat(F.lit("v0-"), F.col("id")).alias("text"),
     )
-    sid = store.commit(df, key_col="tile_id", index_key="url")
-    # doctor the manifest into the legacy shape: monolithic index dir
-    m = store.manifest(sid)
-    legacy_idx = os.path.join("data", f"{sid:08d}", "_legacyindex")
-    df.select(
-        "url", F.pmod(F.col("tile_id"), F.lit(8)).cast("int").alias("tbucket")
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(root, legacy_idx))
-    m["index_path"] = legacy_idx
-    m["index_files"] = []
-    del m["index_key_type"]  # legacy manifests predate this field too
-    with open(store._manifest_path(sid), "w") as f:
-        _json.dump(m, f)
-
-    # point lookup falls back to the monolithic index (unpruned but correct)
-    rows = store.tiles_for_key(spark, "u7").collect()
-    assert {r["tbucket"] for r in rows} == {7 % 29 % 8}
-
-    # a diff that MOVES u7 (tile 29->3) and deletes u8 must locate old buckets
+    store.commit(df, key_col="tile_id")
+    # u7 MOVES (tile 7 -> 3: bucket 7 -> 3) and u8 is deleted
     delta = spark.createDataFrame(
         [("u7", 3, "v1-7", "upsert"), ("u8", 0, None, "delete")],
         "url string, tile_id long, text string, op string",
     )
     sid2 = store.apply_diff(spark, delta, row_key="url", key_col="tile_id")
     m2 = store.manifest(sid2)
-    assert not m2["diff"]["index_missing_full_rewrite"]
-    assert m2["diff"]["n_carried_files"] > 0, "legacy index still enables CoW"
-    assert m2["index_files"] and all(
-        f["partition"].startswith("ibucket=") for f in m2["index_files"]
-    ), "upgraded to partitioned index"
+    assert m2["diff"]["index_missing_full_rewrite"] is True
+    assert m2["diff"]["n_carried_files"] == 0
     after = store.read(spark)
-    got = {r["url"]: r["text"] for r in after.where(F.col("url").isin("u7", "u8")).collect()}
-    assert got == {"u7": "v1-7"}
+    got = {
+        r["url"]: (r["tile_id"], r["text"])
+        for r in after.where(F.col("url").isin("u7", "u8")).collect()
+    }
+    assert got == {"u7": (3, "v1-7")}
+    assert after.count() == 399
     assert after.groupBy("url").count().where(F.col("count") > 1).count() == 0
-    # post-upgrade pruned lookup works
-    hit = store.get_by_key(spark, "u7").collect()
-    assert len(hit) == 1 and hit[0]["text"] == "v1-7"
 
 
 def test_commit_activates_before_tagging(spark, tmp_path, monkeypatch):

@@ -184,7 +184,8 @@ def spatial_join(
         )
     )
     # no unpersist: the zone-cell cache is read by the caller's action (the
-    # single pass above); blocks are freed with the RDD when the returned
-    # plan is GC'd (the tree.py checkpoint-lifetime pattern). Callers that
-    # loop spatial_join in one session should drop previous results.
+    # single pass above). Its entry stays registered until something
+    # unpersists it; GC of the returned plan does not free it. A later call
+    # on an identical zones plan reuses the entry, so a loop leaks one
+    # persisted RDD per distinct zones input.
     return out.select("zone_id", doc_key, "lat", "lon", "tile_id")
