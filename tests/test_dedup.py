@@ -4,6 +4,8 @@ and streaming.stream_near_dedupe."""
 
 from __future__ import annotations
 
+from conftest import jobs_in_group
+
 import tiledspark.dedup as dedup
 from tiledspark.dedup import anchored_keepers, exact_near_keepers, jaccard_gate
 
@@ -20,10 +22,6 @@ def _pairs(spark, edges):
 
 def _ids(df):
     return {r["doc_id"] for r in df.collect()}
-
-
-def _group_jobs(sc, group):
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_jaccard_gate_keeps_pairs_at_or_above_threshold(spark):
@@ -62,13 +60,11 @@ def test_anchored_keepers_zero_pairs_runs_no_job(spark):
     sc = spark.sparkContext
     new = _docs(spark, [1, 2, 3])
     pairs = _pairs(spark, [])
-    group = "anchored-keepers-zero-pairs"
-    sc.setJobGroup(group, "keeper rule on a batch without pairs")
-    try:
-        kept, labels, n_vs_base, n_within = anchored_keepers(new, pairs, 0, "doc_id")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    (kept, labels, n_vs_base, n_within), n_jobs = jobs_in_group(
+        sc, "anchored-keepers-zero-pairs",
+        lambda: anchored_keepers(new, pairs, 0, "doc_id"),
+    )
+    assert n_jobs == 0
     assert kept is new and labels is None
     assert (n_vs_base, n_within) == (0, 0)
 
@@ -91,19 +87,18 @@ def test_exact_near_keepers_zero_pairs_skips_connected_components(spark, monkeyp
 
     def gate(cand, min_jaccard):
         out = jaccard_gate(cand, min_jaccard)
-        at_gate.append(_group_jobs(sc, group))
+        at_gate.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         return out
 
     monkeypatch.setattr(dedup, "jaccard_gate", gate)
-    sc.setJobGroup(group, "dedup core on a corpus without near-dups")
-    try:
-        kept, text_col, stats = exact_near_keepers(
+    (kept, text_col, stats), n_jobs = jobs_in_group(
+        sc, group,
+        lambda: exact_near_keepers(
             docs, 5, "doc_id", "text", min_jaccard=0.5, est_threshold=0.2,
             cc_impl="propagate", boilerplate_max_df=None,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    after_gate = _group_jobs(sc, group) - at_gate[0]
+        ),
+    )
+    after_gate = n_jobs - at_gate[0]
 
     assert text_col == "text"
     assert stats == {
@@ -116,10 +111,5 @@ def test_exact_near_keepers_zero_pairs_skips_connected_components(spark, monkeyp
     }
     assert _ids(kept) == {1, 2, 3, 5}
 
-    plain = "plain-count-of-docs"
-    sc.setJobGroup(plain, "count the docs")
-    try:
-        docs.count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert after_gate <= _group_jobs(sc, plain)
+    _, plain = jobs_in_group(sc, "plain-count-of-docs", docs.count)
+    assert after_gate <= plain

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from tiledspark.lineage import (
@@ -8,15 +9,6 @@ from tiledspark.lineage import (
     partition_lineage,
     with_partition_stamp,
 )
-
-
-def _jobs_in_group(sc, group, fn):
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_observed_counts(spark, sf_dir):
@@ -54,8 +46,8 @@ def test_checkpoint_scalars_add_no_job(spark):
     same job count as a bare eager localCheckpoint of the same frame."""
     sc = spark.sparkContext
     df = spark.range(1000).repartition(4).where(F.col("id") % 7 == 0)
-    _, bare = _jobs_in_group(sc, "bare-local-checkpoint", lambda: df.localCheckpoint())
-    (_, c), gated = _jobs_in_group(
+    _, bare = jobs_in_group(sc, "bare-local-checkpoint", lambda: df.localCheckpoint())
+    (_, c), gated = jobs_in_group(
         sc, "checkpoint-helper", lambda: checkpoint(df, n=F.count(F.lit(1)))
     )
     assert c["n"] == 143

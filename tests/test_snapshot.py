@@ -376,3 +376,168 @@ def test_commit_activates_before_tagging(spark, tmp_path, monkeypatch):
     sid2 = store.commit(df, key_col="tile_id", tag="batch_1")  # the replay
     assert store.find_tag("batch_1") == sid2
     assert store.latest_id() == sid2
+
+
+def _key_cases():
+    """(Spark type, Python value) pairs covering every index key type the
+    driver hash accepts: edge strings, the integer extremes, seeded random
+    strings and longs."""
+    import datetime as dt
+    import random
+
+    rnd = random.Random(7)
+    alphabet = "az09 -/é漢🙂"
+    strings = ["", "a", "é", "漢字", "🙂", "x" * 31, "y" * 32, "z" * 33, "w" * 100]
+    strings += ["".join(rnd.choices(alphabet, k=rnd.randint(0, 80))) for _ in range(40)]
+    cases = [("string", s) for s in strings]
+    cases += [("binary", bytearray(b)) for b in (b"", b"\x00\xff", b"k" * 37)]
+    cases += [("boolean", True), ("boolean", False)]
+    cases += [("tinyint", v) for v in (-128, -1, 0, 127)]
+    cases += [("smallint", v) for v in (-32768, 1, 32767)]
+    cases += [("int", v) for v in (-(2**31), -1, 0, 1, 123, 2**31 - 1)]
+    cases += [("bigint", v) for v in (-(2**63), -1, 0, 1, 2**63 - 1)]
+    cases += [("bigint", rnd.randint(-(2**63), 2**63 - 1)) for _ in range(20)]
+    cases += [("date", d) for d in (dt.date(1970, 1, 1), dt.date(1969, 12, 31), dt.date(2024, 2, 29))]
+    cases += [
+        ("timestamp", t)
+        for t in (
+            dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc),
+            dt.datetime(1960, 5, 6, 7, 8, 9, 10, tzinfo=dt.timezone.utc),
+            dt.datetime(2026, 10, 19, 1, 2, 3, 456789),
+        )
+    ]
+    return cases
+
+
+@pytest.mark.parametrize("n_buckets", [8, 32])
+def test_driver_hash_matches_index_bucket_expr(spark, tmp_path, n_buckets):
+    """The point reads find a key's index partition with the driver port of
+    xxhash64; it must agree with _index_bucket_expr, which wrote the index,
+    for every accepted key type."""
+    from tiledspark import sparkhash
+
+    cases = _key_cases()
+    assert {t for t, _ in cases} == sparkhash.KEY_TYPES
+    store = SnapshotStore(str(tmp_path / "hstore"), n_buckets=n_buckets)
+    cols = []
+    for i, (t, v) in enumerate(cases):
+        lit = F.lit(v).cast(t)
+        cols += [F.xxhash64(lit).alias(f"h{i}"), store._index_bucket_expr(lit).alias(f"b{i}")]
+    row = spark.range(1).select(*cols).collect()[0]
+    for i, (t, v) in enumerate(cases):
+        h = sparkhash.xxhash64(v, t)
+        assert (h, h % n_buckets) == (row[f"h{i}"], row[f"b{i}"]), (t, v)
+
+
+def test_commit_rejects_index_key_the_driver_cannot_hash(spark, tmp_path):
+    store = SnapshotStore(str(tmp_path / "fstore"), n_buckets=4)
+    df = spark.range(10).select(
+        (F.col("id") / 2).alias("score"), (F.col("id") % 3).alias("tile_id")
+    )
+    with pytest.raises(ValueError, match="double"):
+        store.commit(df, key_col="tile_id", index_key="score")
+    assert store.snapshots() == [] and store.latest_id() is None
+    assert os.listdir(os.path.join(store.root, "data")) == []
+
+
+def _small_store(spark, tmp_path, name="pstore"):
+    """400 rows keyed u0..u399, tile_id = id % 29, 8 buckets, url index."""
+    store = SnapshotStore(str(tmp_path / name), n_buckets=8)
+    df = spark.range(400).select(
+        F.concat(F.lit("u"), F.col("id")).alias("url"),
+        (F.col("id") % 29).alias("tile_id"),
+        F.concat(F.lit("v0-"), F.col("id")).alias("text"),
+    )
+    return store, store.commit(df, key_col="tile_id", index_key="url")
+
+
+def test_point_reads_run_one_job(spark, tmp_path):
+    from conftest import jobs_in_group
+
+    sc = spark.sparkContext
+    store, _ = _small_store(spark, tmp_path)
+    rows, n = jobs_in_group(sc, "gbk-present", lambda: store.get_by_key(spark, "u42").collect())
+    assert [(r["url"], r["text"]) for r in rows] == [("u42", "v0-42")]
+    assert n <= 1
+    rows, n = jobs_in_group(sc, "gbk-absent", lambda: store.get_by_key(spark, "nope").collect())
+    assert rows == [] and n <= 1
+    assert store.get_by_key(spark, "nope").inputFiles() == []
+    rows, n = jobs_in_group(sc, "read-tile", lambda: store.read_tile(spark, 13).collect())
+    assert sorted(int(r["url"][1:]) for r in rows) == list(range(13, 400, 29))
+    assert n == 1
+
+
+def test_get_by_key_reads_one_manifest(spark, tmp_path, monkeypatch):
+    """A diff that lands during a lookup must not tear it: the bucket and
+    the files come from the same snapshot."""
+    store, s1 = _small_store(spark, tmp_path)
+    # u7 moves from tile 7 (bucket 7) to tile 3 (bucket 3)
+    delta = spark.createDataFrame(
+        [("u7", 3, "v1-7", "upsert")], "url string, tile_id long, text string, op string"
+    )
+    s2 = store.apply_diff(spark, delta, row_key="url", key_col="tile_id")
+    ids = iter([s1, s2, s2, s2])
+    monkeypatch.setattr(store, "latest_id", lambda: next(ids))
+    rows = store.get_by_key(spark, "u7").collect()
+    assert [(r["tile_id"], r["text"]) for r in rows] == [(7, "v0-7")]
+    monkeypatch.undo()
+    rows = store.get_by_key(spark, "u7").collect()
+    assert [(r["tile_id"], r["text"]) for r in rows] == [(3, "v1-7")]
+
+
+def test_get_by_key_every_key_type(spark, tmp_path):
+    """The driver-side index read finds keys of every accepted type,
+    including null-free duplicates (boolean) and pre-epoch dates/times."""
+    from tiledspark import sparkhash
+
+    base = spark.range(40).select(
+        "id", (F.col("id") % 5).alias("tile_id"), F.concat(F.lit("p"), F.col("id")).alias("p")
+    )
+    keys = {
+        "string": F.concat(F.lit("k"), F.col("id")),
+        "binary": F.concat(F.lit("k"), F.col("id")).cast("binary"),
+        "boolean": F.col("id") % 2 == 0,
+        "tinyint": (F.col("id") - 20).cast("tinyint"),
+        "smallint": (F.col("id") * 1000 - 20000).cast("smallint"),
+        "int": ((F.col("id") - 20) * 50_000_000).cast("int"),
+        "bigint": (F.col("id") - 20) * 400_000_000_000_000_000,
+        "date": F.date_add(F.lit("1969-12-01").cast("date"), F.col("id").cast("int")),
+        "timestamp": F.timestamp_micros((F.col("id") - 20) * 86_400_000_123),
+    }
+    assert set(keys) == sparkhash.KEY_TYPES
+    for t, key in keys.items():
+        df = base.withColumn("k", key).drop("id")
+        store = SnapshotStore(str(tmp_path / f"k_{t}"), n_buckets=4)
+        store.commit(df, key_col="tile_id", index_key="k")
+        assert store.manifest()["index_key_type"] == t
+        want: dict = {}
+        for r in df.collect():
+            want.setdefault(r["k"], set()).add(r["p"])
+        for v in list(want)[:3] + list(want)[-2:]:
+            got = {r["p"] for r in store.get_by_key(spark, v).collect()}
+            assert got == want[v], (t, v)
+
+
+def test_read_schema_is_the_inferred_schema(spark, tmp_path):
+    """The schema a manifest records is the one the parquet reader infers
+    for the same files, after a commit and after a diff that moves a row."""
+    from pyspark.sql.types import StructType
+
+    store = SnapshotStore(str(tmp_path / "sstore"), n_buckets=8)
+    df = spark.range(100).select(
+        F.concat(F.lit("u"), F.col("id")).alias("url"),
+        (F.col("id") % 13).alias("tile_id"),  # non-nullable in df
+        F.array(F.col("id"), F.lit(1)).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit("b").alias("b")).alias("st"),
+        F.create_map(F.lit("m"), F.col("id")).alias("mp"),
+    )
+    store.commit(df, key_col="tile_id", index_key="url")
+    delta = df.where(F.col("url") == "u7").withColumn("tile_id", F.lit(3).cast("long"))
+    store.apply_diff(spark, delta.withColumn("op", F.lit("upsert")), row_key="url")
+    for sid in store.snapshots():
+        m = store.manifest(sid)
+        paths = [os.path.join(store.root, f["path"]) for f in m["files"]]
+        assert store.read(spark, sid).schema == spark.read.parquet(*paths).schema
+        idx = [os.path.join(store.root, f["path"]) for f in m["index_files"]]
+        assert StructType.fromJson(m["index_schema"]) == spark.read.parquet(*idx).schema
+    assert store.manifest()["diff"]["affected_partitions"] == ["tbucket=3", "tbucket=7"]

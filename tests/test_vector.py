@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from tiledspark.vector import ann_topk_lsh, embedding_near_dup_pairs, with_lsh_buckets
@@ -282,14 +283,12 @@ def test_ann_batch_job_count_independent_of_n_queries(spark):
 
     def jobs_for(qids):
         queries = [(int(i), [float(v) for v in mats[i]]) for i in qids]
-        group = f"annbatch_{len(qids)}"
-        sc.setJobGroup(group, "job-count probe")
-        try:
-            got = ann_topk_lsh_batch(spark, emb, queries, k=5).collect()
-        finally:
-            sc.setJobGroup("", "")
+        got, n_jobs = jobs_in_group(
+            sc, f"annbatch_{len(qids)}",
+            lambda: ann_topk_lsh_batch(spark, emb, queries, k=5).collect(),
+        )
         assert len(got) == 5 * len(qids)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return n_jobs
 
     n2 = jobs_for((0, 25))
     n6 = jobs_for((0, 25, 111, 222, 333, 399))

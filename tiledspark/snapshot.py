@@ -19,7 +19,15 @@ Layout under a store root:
   tags.json                                   tag -> first snapshot id; the only
                                               record of tags (missing = no tags)
 
-A store is read only in the format commit() writes.
+A store is read only in the format commit() writes. Each manifest records
+the schema of its data files and of its index files, as Spark's parquet
+reader would infer it (every field nullable), and every read hands it to
+the reader, so no read runs a schema-inference job.
+
+Point reads plan on the driver: read_tile's bucket is tile_id % n_buckets,
+and get_by_key hashes the key with a port of Spark's xxhash64
+(tiledspark.sparkhash), reads the key's one index partition with pyarrow,
+and hands Spark only the scan of the bucket(s) that hold the rows.
 
 Partitioning: rows are hash-bucketed on the table key's tile (tbucket =
 pmod(tile_id, n_buckets)) so a diff touching T tiles rewrites at most
@@ -40,11 +48,53 @@ import shutil
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from tiledspark import sparkhash
 
 DEFAULT_BUCKETS = 32
+
+# the arrow type of each index key type's Spark value (sparkhash.internal_value)
+_ARROW_KEY_TYPES = {
+    "string": pa.string(),
+    "binary": pa.binary(),
+    "boolean": pa.bool_(),
+    "tinyint": pa.int8(),
+    "smallint": pa.int16(),
+    "int": pa.int32(),
+    "date": pa.date32(),
+    "bigint": pa.int64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _nullable(t):
+    """A schema's jsonValue as Spark reads back parquet it wrote: every
+    field, array element and map value nullable (Scala's asNullable)."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {
+            **t,
+            "fields": [
+                {**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]
+            ],
+        }
+    if t["type"] == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {
+            **t,
+            "valueContainsNull": True,
+            "keyType": _nullable(t["keyType"]),
+            "valueType": _nullable(t["valueType"]),
+        }
+    return t
 
 
 class SnapshotStore:
@@ -109,15 +159,14 @@ class SnapshotStore:
 
         if len(paths) <= 4:
             return [one(p) for p in paths]
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
             return list(ex.map(one, paths))
 
     def _index_bucket_expr(self, key):
         """Key-index partition: ibucket = xxhash64(row key) % n_buckets —
         the index is copy-on-write-partitioned exactly like the data, so a
-        diff rewrites only the index partitions its keys hash into."""
+        diff rewrites only the index partitions its keys hash into. Point
+        reads compute the same bucket on the driver (_key_index_paths)."""
         return F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
 
     def commit(
@@ -152,7 +201,22 @@ class SnapshotStore:
         (SURVEY.md risk R2: no nondeterministic aggregates, total-order
         sorts) already guarantees for every internal caller; external
         callers committing e.g. sample()/limit()-derived frames should
-        persist them first or pass index_df explicitly."""
+        persist them first or pass index_df explicitly.
+
+        index_key must have a type sparkhash can hash on the driver
+        (sparkhash.KEY_TYPES); any other raises ValueError before anything
+        is written."""
+        # Spark hash functions are type-sensitive (int vs bigint hash
+        # differently), so the manifest records the index key's type and
+        # point lookups hash their key as THIS type (ADVICE r3).
+        index_key_type = None
+        if index_key is not None:
+            index_key_type = df.schema[index_key].dataType.simpleString()
+            if index_key_type not in sparkhash.KEY_TYPES:
+                raise ValueError(
+                    f"index_key {index_key!r} has type {index_key_type}; point "
+                    f"lookups hash only {sorted(sparkhash.KEY_TYPES)}"
+                )
         sid = self._next_id()
         data_dir = os.path.join(self.root, "data", f"{sid:08d}")
         out = df.withColumn(
@@ -237,12 +301,6 @@ class SnapshotStore:
                 idx_dir, "ibucket=*"
             )
         files = (carried_files or []) + new_files
-        # Record the index key's Spark type: Spark hash functions are
-        # type-sensitive (int vs bigint hash differently), so point lookups
-        # must cast their literal to THIS type before hashing (ADVICE r3).
-        index_key_type = (
-            df.schema[index_key].dataType.simpleString() if index_key is not None else None
-        )
         manifest = {
             "snapshot_id": sid,
             "parent_id": parent if parent is not None else self.latest_id(),
@@ -253,6 +311,12 @@ class SnapshotStore:
             "index_files": index_files,
             "n_buckets": self.n_buckets,
             "files": files,
+            # the read schemas of the data files (tbucket is their directory)
+            # and of the index files (ibucket likewise)
+            "schema": _nullable(df.drop("tbucket").schema.jsonValue()),
+            "index_schema": (
+                _nullable(index_df.schema.jsonValue()) if index_key is not None else None
+            ),
             "lineage": {
                 "new_partitions": sorted({f["partition"] for f in new_files}),
                 "carried_partitions": sorted({f["partition"] for f in (carried_files or [])}),
@@ -293,12 +357,19 @@ class SnapshotStore:
 
     # --- read (ops 29/30) ---------------------------------------------------------
 
+    @staticmethod
+    def _read(spark: SparkSession, schema: dict, paths: list[str]) -> DataFrame:
+        """The store's one read: files of one snapshot, with the schema its
+        manifest records for them. No paths reads an empty frame that opens
+        no file."""
+        return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         m = self.manifest(snapshot_id)
         paths = [os.path.join(self.root, f["path"]) for f in m["files"]]
         if not paths:
             raise ValueError("empty snapshot")
-        return spark.read.parquet(*paths)
+        return self._read(spark, m["schema"], paths)
 
     def time_travel(self, spark: SparkSession, as_of_snapshot: int) -> DataFrame:
         """Read the newest snapshot with id <= as_of_snapshot."""
@@ -361,18 +432,44 @@ class SnapshotStore:
         computable without any index, so exactly one tbucket's files are
         opened (assert via df.inputFiles())."""
         m = self.manifest(snapshot_id)
-        paths = self._bucket_paths(m, {int(tile_id) % self.n_buckets})
-        key_col = m["key_col"]
-        if not paths:
-            return self.read(spark, snapshot_id).where(F.lit(False))
-        return spark.read.parquet(*paths).where(F.col(key_col) == tile_id)
+        paths = self._bucket_paths(m, {int(tile_id) % m["n_buckets"]})
+        return self._read(spark, m["schema"], paths).where(F.col(m["key_col"]) == tile_id)
 
-    def _ibucket_paths(self, m: dict[str, Any], ibuckets: set[int] | None = None) -> list[str]:
-        files = m.get("index_files") or []
-        if ibuckets is not None:
-            parts = {f"ibucket={b}" for b in ibuckets}
-            files = [f for f in files if f["partition"] in parts]
-        return [os.path.join(self.root, f["path"]) for f in files]
+    def _key_index_paths(self, m: dict[str, Any], key_value) -> list[str]:
+        """The files of the one index partition key_value hashes into:
+        _index_bucket_expr computed on the driver, as the index key's type.
+        A null key equals nothing, so it has none."""
+        if not m.get("index_files"):
+            raise ValueError(
+                "snapshot was committed without index_key; point lookups need it"
+            )
+        if key_value is None:
+            return []
+        h = sparkhash.xxhash64(key_value, m["index_key_type"])
+        part = f"ibucket={h % m['n_buckets']}"  # Python % is pmod
+        return [
+            os.path.join(self.root, f["path"])
+            for f in m["index_files"]
+            if f["partition"] == part
+        ]
+
+    def _key_buckets(self, m: dict[str, Any], key_value) -> set[int]:
+        """The tbuckets holding key_value, from its index partition read
+        with pyarrow on the driver (the partition's few small files)."""
+        paths = self._key_index_paths(m, key_value)
+        if not paths:
+            return set()
+        t = m["index_key_type"]
+        at = _ARROW_KEY_TYPES[t]
+        key = pc.field(m["index_key"])
+        if t == "timestamp":  # Spark writes INT96, which arrow reads as ns
+            key = key.cast(at)
+        hits = pq.read_table(
+            paths,
+            columns=["tbucket"],
+            filters=key == pa.scalar(sparkhash.internal_value(key_value, t), at),
+        )
+        return set(hits.column("tbucket").to_pylist())
 
     def tiles_for_key(
         self, spark: SparkSession, key_value, snapshot_id: int | None = None
@@ -381,37 +478,23 @@ class SnapshotStore:
         bucket(s) hold the object (the reference's id→tiles lookup). Opens
         ONLY the index partition the key hashes into (ibucket pruning)."""
         m = self.manifest(snapshot_id)
-        if not m.get("index_files"):
-            raise ValueError(
-                "snapshot was committed without index_key; point lookups need it"
-            )
-        # ADVICE r3: xxhash64 is TYPE-sensitive and F.lit(small python int)
-        # is IntegerType — for a bigint index_key the uncast literal would
-        # hash into the wrong ibucket and the lookup would silently return
-        # empty. Cast to the type the index was partitioned with.
-        key_lit = F.lit(key_value).cast(m["index_key_type"])
-        ib = spark.range(1).select(
-            self._index_bucket_expr(key_lit).alias("ib")
-        ).collect()[0]["ib"]
-        paths = self._ibucket_paths(m, {int(ib)})
-        if not paths:
-            empty = spark.read.parquet(*self._ibucket_paths(m)).where(F.lit(False))
-            return empty
-        idx = spark.read.parquet(*paths)
-        return idx.where(F.col(m["index_key"]) == key_value)
+        paths = self._key_index_paths(m, key_value)
+        return self._read(spark, m["index_schema"], paths).where(
+            F.col(m["index_key"]) == key_value
+        )
 
     def get_by_key(
         self, spark: SparkSession, key_value, snapshot_id: int | None = None
     ) -> DataFrame:
-        """Get(type, id): one object by row key. Consults the key index for
-        the bucket(s), then scans only those buckets' files."""
+        """Get(type, id): one object by row key, as a Python value of the
+        index key's type. The index lookup runs on the driver, against the
+        same manifest as the scan, which opens only the bucket(s) that
+        hold the key; an absent key opens no file."""
         m = self.manifest(snapshot_id)
-        hits = self.tiles_for_key(spark, key_value, snapshot_id).collect()
-        buckets = {int(r["tbucket"]) for r in hits}
-        if not buckets:
-            return self.read(spark, snapshot_id).where(F.lit(False))
-        paths = self._bucket_paths(m, buckets)
-        return spark.read.parquet(*paths).where(F.col(m["index_key"]) == key_value)
+        paths = self._bucket_paths(m, self._key_buckets(m, key_value))
+        return self._read(spark, m["schema"], paths).where(
+            F.col(m["index_key"]) == key_value
+        )
 
     # --- copy-on-write diff (op 8) ---------------------------------------------------
 
@@ -480,12 +563,7 @@ class SnapshotStore:
                 for f in base_m["index_files"]
                 if f["partition"] in idx_parts
             ]
-            if touched_idx_paths:
-                old_idx = spark.read.parquet(*touched_idx_paths)
-            else:
-                old_idx = spark.read.parquet(*self._ibucket_paths(base_m)).where(
-                    F.lit(False)
-                )
+            old_idx = self._read(spark, base_m["index_schema"], touched_idx_paths)
             old = old_idx.join(
                 F.broadcast(delta_keys.select(row_key)), row_key, "left_semi"
             )
@@ -520,10 +598,7 @@ class SnapshotStore:
         ]
         upserts = delta.where(F.col("op") == "upsert").drop("op", "tbucket")
 
-        if touched_paths:
-            current = spark.read.parquet(*touched_paths)
-        else:
-            current = upserts.limit(0)
+        current = self._read(spark, base_m["schema"], touched_paths)
         merged = (
             current.join(
                 delta.select(row_key).distinct(), row_key, "left_anti"
