@@ -184,13 +184,29 @@ def _warmup(spark, pages, zones_path: str) -> None:
             ).assign(embedding=lambda d: d["embedding"].map(list))
         )
     ).count()
-    knn_cell_ring(
-        spark,
-        docs.limit(2_000),
-        spark.createDataFrame(pd.DataFrame({"query_id": [0], "lat": [40.0], "lon": [-100.0]})),
-        k=3,
-        zoom=8,
-    ).count()
+    # both kNN paths: 1 query x 2k docs takes the exact scan; past
+    # EXACT_MAX_PAIRS the same docs take the ring rounds and the straggler
+    # scan that the timed leaf (20 queries x the sf docs) runs
+    from tiledspark.knn import EXACT_MAX_PAIRS
+
+    rng = np.random.default_rng(98)
+    for n_q in (1, EXACT_MAX_PAIRS // 2_000 + 1):
+        knn_cell_ring(
+            spark,
+            docs.limit(2_000),
+            spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "query_id": np.arange(n_q),
+                        "lat": rng.uniform(-55, 65, n_q),
+                        "lon": rng.uniform(-170, 170, n_q),
+                    }
+                )
+            ),
+            k=3,
+            zoom=8,
+            max_radius=8,
+        ).count()
     # Round 5: the timed ann_lsh_topk row runs BOTH full ANN calls (LSH
     # multiprobe + IVF) over a parquet∪local-literal union — with_lsh_buckets
     # above warms only the bucketing UDF, leaving the IVF centroid-assign

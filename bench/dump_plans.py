@@ -60,8 +60,11 @@ def main() -> None:
             spark.read.parquet(zones_path),
         )
 
-    # knn: the driver loop's round plans are runtime state; capture the
-    # FIRST round's topk plan via the _round_plans hook + the output plan
+    # knn: the output plan only (round plans are runtime state; it passes
+    # no _round_plans). At the default sf0.1 (600k pages, 180k geocoded
+    # docs) the 20 queries make 3.6M pairs, above
+    # knn.EXACT_MAX_PAIRS, so the call runs ring rounds; at sf0.01 and
+    # below it takes the exact scan
     if not only or "knn_cell_ring" in only:
         import numpy as np
         import pandas as pd

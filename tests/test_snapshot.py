@@ -460,8 +460,10 @@ def test_point_reads_run_one_job(spark, tmp_path):
     assert [(r["url"], r["text"]) for r in rows] == [("u42", "v0-42")]
     assert n <= 1
     rows, n = jobs_in_group(sc, "gbk-absent", lambda: store.get_by_key(spark, "nope").collect())
-    assert rows == [] and n <= 1
-    assert store.get_by_key(spark, "nope").inputFiles() == []
+    assert rows == [] and n == 0
+    absent = store.get_by_key(spark, "nope")
+    assert absent.inputFiles() == []
+    assert absent.schema == store.get_by_key(spark, "u42").schema
     rows, n = jobs_in_group(sc, "read-tile", lambda: store.read_tile(spark, 13).collect())
     assert sorted(int(r["url"][1:]) for r in rows) == list(range(13, 400, 29))
     assert n == 1

@@ -1,18 +1,44 @@
 """Grid-partitioned kNN via cell-ring expansion (SURVEY.md op 19; north_star:
 "grid-partitioned kNN via cell-ring expansion").
 
-Strategy: geometrically growing block radii (×GROWTH per round:
-r = 1, 8, 64, ...). Round t explores the (2r+1)x(2r+1) tile block
-around each unresolved query: explode the block cells on
-the (small) query side, equi-join against the doc cell index, take each
-query's k nearest by haversine. A query RESOLVES when its kth distance is <=
-the exact geographic distance from the query point to the block's edge — any
-unseen doc lies beyond that edge, so the top-k is provably final.
-Stragglers in empty regions fall back to a broadcast brute-force pass.
+Two exact paths, chosen per call from |queries| x |docs|. Both counts are
+known before any search: |queries| from the job that checkpoints the
+queries, |docs| from the job that fills the doc-cell cache.
 
-Scale shape: the docs side is touched only through equi-joins on cell (hash
-shuffle or broadcast of the exploded query cells — queries are the small
-side). No cross join ever materializes at planet scale; per round the work is
+- Exact scan, when |queries| x |docs| <= EXACT_MAX_PAIRS: the docs cross
+  join the queries (the side with fewer rows is broadcast), and each query
+  keeps its k nearest by haversine. One pass and no rounds: a call on a
+  small batch runs 6 jobs, against 30 for the rounds on serve_mixed's.
+- Ring rounds, above the budget: geometrically growing block radii
+  (×GROWTH per round: r = 1, 8, 64, ...). Round t explores the
+  (2r+1)x(2r+1) tile block around each unresolved query: explode the block
+  cells on the (small) query side, equi-join against the doc cell index,
+  take each query's k nearest by haversine. A query RESOLVES when its kth
+  distance is <= the exact geographic distance from the query point to the
+  block's edge — any unseen doc lies beyond that edge, so the top-k is
+  provably final. Stragglers in empty regions take the exact scan.
+
+Both paths return the same rows (tests/test_knn.py pins them equal). The
+budget sits below the measured crossover: 20 queries (half near docs, half
+uniform), k=5, zoom 8, local[4] on 4 cores, median of 3 calls, process-tree
+CPU; rows identical on both paths at every size. The first docs set is
+20k synthetic pages' geocoded docs (clustered), the rest are uniform.
+
+  | docs  | pairs | ring wall / cpu | exact wall / cpu |
+  | ----- | ----- | --------------- | ---------------- |
+  | 6.7k  | 133k  | 3.2 s / 10.3 s  | 0.8 s / 2.4 s    |
+  | 50k   | 1M    | 1.8 s / 3.8 s   | 1.1 s / 3.7 s    |
+  | 100k  | 2M    | 2.9 s / 8.8 s   | 1.7 s / 5.3 s    |
+  | 200k  | 4M    | 2.5 s / 5.8 s   | 2.9 s / 9.8 s    |
+  | 1M    | 20M   | 3.6 s / 9.7 s   | 12.0 s / 44.7 s  |
+
+The ring's cost is a fixed number of rounds of small jobs; the scan's
+grows with the pairs.
+
+Scale shape: above the budget the docs side is touched only through
+equi-joins on cell (hash shuffle or broadcast of the exploded query cells —
+queries are the small side). No cross join over more than EXACT_MAX_PAIRS
+pairs ever runs except for stragglers; per round the work is
 |queries_unresolved| x block_cells join fan-in.
 
 Distances: haversine in native Column math (op 20 — UDF-free, codegen'd).
@@ -27,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiledspark import tiles
-from tiledspark.lineage import checkpoint
+from tiledspark.lineage import checkpoint, materialize
 
 EARTH_R = 6371008.8  # meters (IUGG mean)
 # block-radius multiplier between ring rounds (radii 1, 8, 64). The
@@ -36,6 +62,10 @@ EARTH_R = 6371008.8  # meters (IUGG mean)
 # round for fewer rounds, and knn wall is dominated by the driver gaps
 # between rounds' jobs, not by task time.
 GROWTH = 8
+# |queries| x |docs| at or below which every query takes the one exact
+# scan instead of ring rounds: just under the measured crossover (module
+# docstring), between 2M pairs, where the scan still used less cpu, and 4M
+EXACT_MAX_PAIRS = 1 << 21
 
 
 def _union_all(frames: list[DataFrame]) -> DataFrame:
@@ -76,7 +106,9 @@ def knn_cell_ring(
     _round_plans: list | None = None,
 ) -> DataFrame:
     """docs(lat, lon, <doc_key>), queries(query_id, lat, lon) ->
-    (query_id, rank, <doc_key>, dist_m). Deterministic.
+    (query_id, rank, <doc_key>, dist_m). Deterministic. A batch with
+    |queries| x |docs| <= EXACT_MAX_PAIRS takes one exact scan; the rest of
+    this docstring is about the ring rounds that larger batches run.
 
     Each round's `unresolved` frontier and resolved output are
     checkpointed (round-1 fix): without the cut, round t re-derives every
@@ -103,38 +135,86 @@ def knn_cell_ring(
     )
     # the cache lives for this call only, whether it returns or raises
     try:
+        unresolved, c = checkpoint(
+            queries.select(
+                "query_id",
+                F.col("lat").alias("q_lat"),
+                F.col("lon").alias("q_lon"),
+                tiles.tile_x_expr(F.col("lon"), zoom).alias("qx"),
+                tiles.tile_y_expr(F.col("lat"), zoom).alias("qy"),
+                F.lit(1).alias("r"),
+            ),
+            n=F.count(F.lit(1)),
+        )
+        n_queries = c["n"]
+        n_docs = materialize(doc_cells, n=F.count(F.lit(1)))["n"]
+        if n_queries * n_docs <= EXACT_MAX_PAIRS:
+            return _exact_topk(unresolved, n_queries, doc_cells, n_docs, k, doc_key)
         return _ring_search(
-            doc_cells, queries, k, zoom, doc_key, max_radius, _round_plans
+            doc_cells, n_docs, unresolved, n_queries, k, zoom, doc_key,
+            max_radius, _round_plans,
         )
     finally:
         doc_cells.unpersist()
 
 
+def _exact_topk(
+    queries: DataFrame, n_queries: int, doc_cells: DataFrame, n_docs: int,
+    k: int, doc_key: str,
+) -> DataFrame:
+    """Every query's exact top-k over all doc cells. Within
+    EXACT_MAX_PAIRS the cross join broadcasts whichever side has fewer
+    rows, at most sqrt(EXACT_MAX_PAIRS) ~ 1.4k: both counts are known,
+    while the planner's size estimate for queries built from a Python list
+    is unbounded, so by its own choice it broadcasts the docs. Above the
+    budget (ring stragglers) neither side is bounded, and the planner
+    chooses. The rank filter plans as a partial WindowGroupLimit before
+    the exchange, so at most partitions x |queries| x k rows are shuffled.
+    Checkpointed eagerly, so it runs while the doc-cell cache is warm —
+    lazily it would evaluate at the caller's action, after the unpersist,
+    and recompute the docs uncached."""
+    queries = queries.select("query_id", "q_lat", "q_lon")
+    docs = doc_cells.drop("cell")
+    if n_queries * n_docs <= EXACT_MAX_PAIRS:
+        if n_queries <= n_docs:
+            queries = F.broadcast(queries)
+        else:
+            docs = F.broadcast(docs)
+    return (
+        docs.crossJoin(queries)
+        .withColumn(
+            "dist_m",
+            haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("d_lat"), F.col("d_lon")),
+        )
+        .withColumn(
+            "rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(F.asc("dist_m"), F.asc("_dk"))
+            ),
+        )
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", F.col("_dk").alias(doc_key), "dist_m")
+        .localCheckpoint(eager=True)
+    )
+
+
 def _ring_search(
     doc_cells: DataFrame,
-    queries: DataFrame,
+    n_docs: int,
+    unresolved: DataFrame,
+    n_unresolved: int,
     k: int,
     zoom: int,
     doc_key: str,
     max_radius: int,
     _round_plans: list | None,
 ) -> DataFrame:
-    """knn_cell_ring's round loop over the cached doc cells (_dk, d_lat,
-    d_lon, cell). Every part of the returned frame is checkpointed before
-    it returns, so the caller may drop the doc-cell cache right after."""
+    """knn_cell_ring's round loop over the n_docs cached doc cells (_dk,
+    d_lat, d_lon, cell), from the n_unresolved >= 1 checkpointed queries
+    (query_id, q_lat, q_lon, qx, qy, r). Every part of the returned frame
+    is checkpointed before it returns, so the caller may drop the doc-cell
+    cache right after."""
     n = 1 << zoom
-    unresolved, c = checkpoint(
-        queries.select(
-            "query_id",
-            F.col("lat").alias("q_lat"),
-            F.col("lon").alias("q_lon"),
-            tiles.tile_x_expr(F.col("lon"), zoom).alias("qx"),
-            tiles.tile_y_expr(F.col("lat"), zoom).alias("qy"),
-            F.lit(1).alias("r"),
-        ),
-        n=F.count(F.lit(1)),
-    )
-    n_unresolved = c["n"]
     resolved_parts: list[DataFrame] = []
     straggler_parts: list[DataFrame] = []
     n_stragglers = 0
@@ -249,38 +329,8 @@ def _ring_search(
     # stragglers: brute force (queries side is tiny by now; the gate is a
     # driver-tracked scalar — no take(1) job)
     if n_stragglers:
-        brute = (
-            unresolved.crossJoin(doc_cells.drop("cell"))
-            .withColumn(
-                "dist_m",
-                haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("d_lat"), F.col("d_lon")),
-            )
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(F.asc("dist_m"), F.asc("_dk"))
-                ),
-            )
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", F.col("_dk").alias(doc_key), "dist_m")
-            # eager, like every round's topk: the straggler scan must run
-            # WHILE the doc_cells cache is warm — lazily it would evaluate
-            # at the caller's action, after the unpersist below, recomputing
-            # the doc-scale projection uncached (round-6 audit)
-            .localCheckpoint(eager=True)
-        )
-        resolved_parts.append(brute)
-
-    if not resolved_parts:  # no queries: an empty frame with the output schema
         resolved_parts.append(
-            unresolved.crossJoin(doc_cells)
-            .select(
-                "query_id",
-                F.lit(0).alias("rank"),
-                F.col("_dk").alias(doc_key),
-                F.lit(0.0).alias("dist_m"),
-            )
-            .limit(0)
+            _exact_topk(unresolved, n_stragglers, doc_cells, n_docs, k, doc_key)
         )
     return _union_all(resolved_parts)
 

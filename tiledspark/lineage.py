@@ -6,7 +6,8 @@ Three mechanisms:
   Observation after the consuming action finishes.
 - `checkpoint(df, **metrics)`: the engine's one "checkpoint, then read a
   scalar off it" gate — the scalars ride the job that materializes the
-  checkpoint.
+  checkpoint. `materialize(df, **metrics)` is the same gate for a frame
+  that is cached instead (the scalars ride the job that fills the cache).
 - `with_partition_stamp(df)`: mapInArrow pass stamping each row with its
   physical partition id + per-partition row position, for per-partition
   lineage rows (written alongside snapshot manifests by SnapshotStore).
@@ -44,8 +45,23 @@ def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict[str, i
     aggregate exchange as a second job (one more map stage under AQE)."""
     obs = Observation()
     out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).localCheckpoint()
+    return out, _scalars(obs, metrics)
+
+
+def materialize(df: DataFrame, **metrics: Column) -> dict[str, int]:
+    """Run df once and drop its rows -> {name: scalar}, as checkpoint reads
+    them. One job (a noop write), which for a cached df is the job that
+    fills the cache; a count() under AQE would run two."""
+    obs = Observation()
+    df.observe(obs, *[c.alias(k) for k, c in metrics.items()]).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    return _scalars(obs, metrics)
+
+
+def _scalars(obs: Observation, metrics: dict[str, Column]) -> dict[str, int]:
     got = obs.get
-    return out, {k: int(got[k] or 0) for k in metrics}
+    return {k: int(got[k] or 0) for k in metrics}
 
 
 def with_partition_stamp(df: DataFrame) -> DataFrame:

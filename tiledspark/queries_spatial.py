@@ -415,7 +415,10 @@ def knn_cell_ring_q(spark, sf_dir):
     exact cross-track edge bounds) over customer-derived points vs a DuckDB
     brute-force haversine + ROW_NUMBER re-derivation. The cell-ring algorithm
     is exact by construction, so its top-k must equal brute force; the synth
-    pages corpus variant stays brute-force-checked in pytest (test_knn)."""
+    pages corpus variant stays brute-force-checked in pytest (test_knn).
+    Its 5 queries x 15k customers (sf0.1) are within knn.EXACT_MAX_PAIRS,
+    so this row runs the exact scan; test_knn pins the ring rounds to the
+    same rows."""
     from tiledspark.knn import knn_cell_ring
 
     c = table(spark, sf_dir, "customer")

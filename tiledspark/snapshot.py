@@ -361,8 +361,9 @@ class SnapshotStore:
     def _read(spark: SparkSession, schema: dict, paths: list[str]) -> DataFrame:
         """The store's one read: files of one snapshot, with the schema its
         manifest records for them. No paths reads an empty frame that opens
-        no file."""
-        return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+        no file and runs no job: limit(0) plans as an empty local relation."""
+        df = spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+        return df if paths else df.limit(0)
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
         m = self.manifest(snapshot_id)
