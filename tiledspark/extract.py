@@ -16,8 +16,10 @@ extract_coords and filtered only by consumers that need coordinates).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from tiledspark.topk import top_k
 
 GEO_RX = r"geo:(-?\d{1,2}\.\d{6}),(-?\d{1,3}\.\d{6})"
 
@@ -55,12 +57,8 @@ def extract_coords(pages: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def dedupe_latest_by_url(pages: DataFrame) -> DataFrame:
-    """Keep the newest crawl per url (op 23). warc_ts is unique per row in the
-    synth corpus, so the result is deterministic; url is the tiebreak anyway.
-    """
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    """Keep the newest crawl per url (op 23). Deterministic when pages hold
+    one row per (url, warc_ts), as the synth corpus does: warc_ts then
+    orders each url's rows totally. Two crawls of one url at the same
+    warc_ts would leave the kept row to partitioning."""
+    return top_k(pages, 1, "url", [F.desc("warc_ts")])

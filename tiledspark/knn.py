@@ -49,11 +49,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiledspark import tiles
 from tiledspark.lineage import checkpoint, materialize
+from tiledspark.topk import check_k, top_k
 
 EARTH_R = 6371008.8  # meters (IUGG mean)
 # block-radius multiplier between ring rounds (radii 1, 8, 64). The
@@ -95,6 +96,17 @@ def _tile_lat_bounds(y, zoom):
     return lat_of(y + F.lit(1.0)), lat_of(y.cast("double"))  # (south, north)
 
 
+def _nearest(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, q_lat, q_lon, _dk, d_lat, d_lon, ...) pairs -> each
+    query's k nearest by haversine, with dist_m and rank 1..k; ties by
+    doc key."""
+    scored = pairs.withColumn(
+        "dist_m",
+        haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("d_lat"), F.col("d_lon")),
+    )
+    return top_k(scored, k, "query_id", [F.asc("dist_m"), F.asc("_dk")], rank="rank")
+
+
 def knn_cell_ring(
     spark: SparkSession,
     docs: DataFrame,
@@ -123,6 +135,7 @@ def knn_cell_ring(
     materialized the resolved subset AND re-ran the whole join+window for
     the survivor stats, 2 doc-scale jobs per round).
     """
+    check_k("knn_cell_ring", k)
     doc_cells = (
         docs.where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
         .select(
@@ -168,8 +181,9 @@ def _exact_topk(
     while the planner's size estimate for queries built from a Python list
     is unbounded, so by its own choice it broadcasts the docs. Above the
     budget (ring stragglers) neither side is bounded, and the planner
-    chooses. The rank filter plans as a partial WindowGroupLimit before
-    the exchange, so at most partitions x |queries| x k rows are shuffled.
+    chooses. The ranking is topk.top_k, which plans a partial
+    WindowGroupLimit before the exchange, so at most partitions x
+    |queries| x k rows are shuffled.
     Checkpointed eagerly, so it runs while the doc-cell cache is warm —
     lazily it would evaluate at the caller's action, after the unpersist,
     and recompute the docs uncached."""
@@ -181,18 +195,7 @@ def _exact_topk(
         else:
             docs = F.broadcast(docs)
     return (
-        docs.crossJoin(queries)
-        .withColumn(
-            "dist_m",
-            haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("d_lat"), F.col("d_lon")),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.asc("dist_m"), F.asc("_dk"))
-            ),
-        )
-        .where(F.col("rank") <= k)
+        _nearest(docs.crossJoin(queries), k)
         .select("query_id", "rank", F.col("_dk").alias(doc_key), "dist_m")
         .localCheckpoint(eager=True)
     )
@@ -255,20 +258,8 @@ def _ring_search(
         # the round's ONLY doc-scale pass; lazy checkpoint — materialized by
         # the survivors checkpoint below, then re-read from blocks by the
         # resolved_parts union at the caller's action
-        topk = (
-            cand_cells.join(doc_cells, "cell")
-            .withColumn(
-                "dist_m",
-                haversine_m(F.col("q_lat"), F.col("q_lon"), F.col("d_lat"), F.col("d_lon")),
-            )
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(F.asc("dist_m"), F.asc("_dk"))
-                ),
-            )
-            .where(F.col("rank") <= k)
-            .localCheckpoint(eager=False)
+        topk = _nearest(cand_cells.join(doc_cells, "cell"), k).localCheckpoint(
+            eager=False
         )
         stats = topk.groupBy("query_id", "q_lat", "q_lon", "qx", "qy", "r").agg(
             F.count(F.lit(1)).alias("n_found"), F.max("dist_m").alias("kth_dist")
@@ -353,6 +344,7 @@ def knn_self_join(
     matches are excluded AFTER resolution by asking for k+1 and re-ranking:
     a doc's own row is dist 0 but co-located distinct docs also score 0, so
     filtering by key (not by rank-1) keeps exactly the true k others."""
+    check_k("knn_self_join", k)
     queries = docs.where(
         F.col("lat").isNotNull() & F.col("lon").isNotNull()
     ).select(F.col(doc_key).alias("query_id"), "lat", "lon")
@@ -360,10 +352,7 @@ def knn_self_join(
         spark, docs, queries, k=k + 1, zoom=zoom, doc_key=doc_key,
         max_radius=max_radius,
     )
-    out = got.where(F.col("query_id") != F.col(doc_key))
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist_m"), F.asc(doc_key))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("query_id").alias("query_key"), "rank", doc_key, "dist_m")
-    )
+    others = got.where(F.col("query_id") != F.col(doc_key))
+    return top_k(
+        others, k, "query_id", [F.asc("dist_m"), F.asc(doc_key)], rank="rank"
+    ).select(F.col("query_id").alias("query_key"), "rank", doc_key, "dist_m")

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tiledspark.topk import top_k
+
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 4  # 4 rows per band with 16 perms
 
@@ -611,10 +613,7 @@ def simhash_pairs_from_hashes(
         F.explode(simhash_block_keys_expr(F.col("simhash"), max_hamming)).alias("bk"),
     )
     if bucket_cap is not None:
-        w = Window.partitionBy("bk").orderBy("_id")
-        blocked = blocked.withColumn("_bn", F.row_number().over(w)).where(
-            F.col("_bn") <= bucket_cap
-        ).drop("_bn")
+        blocked = top_k(blocked, bucket_cap, "bk", ["_id"])
     a = blocked.select("bk", F.col("_id").alias("id_a"), F.col("simhash").alias("sh_a"))
     b = blocked.select("bk", F.col("_id").alias("id_b"), F.col("simhash").alias("sh_b"))
     return (
@@ -830,10 +829,8 @@ def train_char_ngram_profiles(
         .groupBy("_lang", "g")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    w = Window.partitionBy("_lang").orderBy(F.desc("c"), F.asc("g"))
     rows = (
-        counts.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= top)
+        top_k(counts, top, "_lang", [F.desc("c"), F.asc("g")], rank="r")
         .orderBy("_lang", "r")
         .collect()
     )
@@ -871,12 +868,9 @@ def langid_ngram_predict(
         .groupBy("_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    w = Window.partitionBy("_id").orderBy(F.desc("c"), F.asc("g"))
-    doc_ranked = (
-        grams.withColumn("dr", F.row_number().over(w) - 1)
-        .where(F.col("dr") < doc_top)
-        .select("_id", "g", "dr")
-    )
+    doc_ranked = top_k(
+        grams, doc_top, "_id", [F.desc("c"), F.asc("g")], rank="dr"
+    ).select("_id", "g", (F.col("dr") - 1).alias("dr"))
     langs = sorted(profiles)
     penalty = max(len(p) for p in profiles.values())
     prof_rows = [
@@ -1260,11 +1254,8 @@ def lsh_candidate_pairs_incremental(
         "band_idx", "band_hash", F.col("_id").alias("_nid"), "_bid"
     )
     if cross_bucket_cap is not None:
-        w = Window.partitionBy("band_idx", "band_hash", "_nid").orderBy(F.asc("_bid"))
-        cross = (
-            cross.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= cross_bucket_cap)
-            .drop("_rn")
+        cross = top_k(
+            cross, cross_bucket_cap, ["band_idx", "band_hash", "_nid"], [F.asc("_bid")]
         )
     cross = cross.select(
         F.least("_nid", "_bid").alias("id_a"), F.greatest("_nid", "_bid").alias("id_b")
@@ -1377,12 +1368,7 @@ def containment_pairs(
     the result feeds an exactness oracle)."""
     fp, post = _containment_postings(df, id_col, text_col, k, w, max_df)
     if bucket_cap is not None:
-        bw = Window.partitionBy("f").orderBy("_id")
-        post = (
-            post.withColumn("_bn", F.row_number().over(bw))
-            .where(F.col("_bn") <= bucket_cap)
-            .drop("_bn")
-        )
+        post = top_k(post, bucket_cap, "f", ["_id"])
     cand = (
         post.select(F.col("f"), F.col("_id").alias("id_a"))
         .join(post.select(F.col("f"), F.col("_id").alias("id_b")), "f")

@@ -35,12 +35,13 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tiledspark.lineage import checkpoint
 from tiledspark.textops import _ensure_parallelism
+from tiledspark.topk import check_k, top_k
 
 LSH_SEED = 424242
 N_TABLES = 8
@@ -180,6 +181,7 @@ def ann_topk_lsh(
     than k ids the call escalates to 2-bit multiprobe, then to an exact
     brute-force scan. At web scale the escalation is the rare path (buckets
     are population-sized); correctness never depends on it being rare."""
+    check_k("ann_topk_lsh", k)
     dim = len(query_vec)
     planes = _planes(dim, n_tables, n_bits)
     qb = _np_buckets(np.asarray(query_vec, np.float64)[None, :], planes)
@@ -318,6 +320,7 @@ def ann_topk_ivf(
     escalates to probing every list (exact). n_probe == n_centroids is
     exact by construction (every vector is in some list). Pass pre-trained
     `centroids` to amortize training across queries."""
+    check_k("ann_topk_ivf", k)
     if centroids is None:
         centroids = ivf_train_centroids(emb, emb_col, n_centroids)
     q = np.asarray(query_vec, np.float64)
@@ -354,16 +357,34 @@ def ann_topk_ivf(
 # escalation level (the kNN cell-ring's round shape): level-0/1 probes for
 # every query go out as a single broadcast (query_id, probe) table joined
 # against the bucketed corpus; only the queries still short of k re-enter the
-# next level. Results are identical to calling the single-query API N times
-# (asserted in tests/test_vector.py).
+# next level. Queries that exhaust the levels take the exact scan
+# (_exact_cands: every vector x their ids). Every batch then scores its
+# candidates against the broadcast query vectors and keeps each query's top
+# k with topk.top_k (cos_sim desc, id asc), which plans the per-query limit
+# before the shuffle. Results are identical to calling the single-query API
+# N times (asserted in tests/test_vector.py).
 
 
-def _rank_topk_per_query(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+def _query_vectors(
+    spark: SparkSession, queries: list[tuple[int, list[float]]]
+) -> DataFrame:
+    """The batch's (query_id, _qv) table."""
+    return spark.createDataFrame(
+        [(int(q), [float(x) for x in v]) for q, v in queries],
+        "query_id long, _qv array<double>",
+    )
+
+
+def _exact_cands(
+    spark: SparkSession, emb: DataFrame, qids: list[int], id_col: str, emb_col: str
+) -> DataFrame:
+    """Every vector x every id in qids -> (query_id, <id_col>, <emb_col>):
+    the exact-scan candidates, with the query ids on a broadcast."""
+    qdf = spark.createDataFrame([(q,) for q in qids], "query_id long")
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
+        emb.select(id_col, emb_col)
+        .crossJoin(F.broadcast(qdf))
+        .select("query_id", id_col, emb_col)
     )
 
 
@@ -375,14 +396,14 @@ def _score_and_rank(
     id_col: str,
     emb_col: str,
 ) -> DataFrame:
-    qv_df = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "query_id long, _qv array<double>",
-    )
-    scored = cand.join(F.broadcast(qv_df), "query_id").withColumn(
+    """(query_id, <id_col>, <emb_col>) candidates -> each query's top k by
+    exact cosine against its broadcast query vector, ties by id."""
+    scored = cand.join(F.broadcast(_query_vectors(spark, queries)), "query_id").withColumn(
         "cos_sim", _cos_expr(F.col(emb_col), F.col("_qv"))
     )
-    return _rank_topk_per_query(scored, k, id_col).select("query_id", id_col, "cos_sim")
+    return top_k(scored, k, "query_id", [F.desc("cos_sim"), F.asc(id_col)]).select(
+        "query_id", id_col, "cos_sim"
+    )
 
 
 def _counts_by_query(cand: DataFrame) -> dict[int, int]:
@@ -416,6 +437,7 @@ def ann_topk_lsh_batch(
     pricing covers what the API REALLY scanned, escalation included."""
     if not queries:
         raise ValueError("ann_topk_lsh_batch: empty query list")
+    check_k("ann_topk_lsh_batch", k)
     qids = [int(q) for q, _ in queries]
     dim = len(queries[0][1])
     planes = _planes(dim, n_tables, n_bits)
@@ -464,12 +486,9 @@ def ann_topk_lsh_batch(
         exact_q = sorted(q for q in deficient if have2.get(q, 0) < k)
         cand = cand.where(~F.col("query_id").isin(sorted(deficient))).unionByName(cand2)
         if exact_q:
-            qdf = spark.createDataFrame([(q,) for q in exact_q], "query_id long")
-            exact = (
-                _ensure_parallelism(emb.select(id_col, emb_col))
-                .crossJoin(F.broadcast(qdf))
-                .select("query_id", id_col, emb_col)
-            )
+            # widened (textops._ensure_parallelism) for the interpreted cosine
+            wide = _ensure_parallelism(emb.select(id_col, emb_col))
+            exact = _exact_cands(spark, wide, exact_q, id_col, emb_col)
             cand = cand.where(~F.col("query_id").isin(exact_q)).unionByName(exact)
     if stats_out is not None:
         stats_out.update(
@@ -501,6 +520,7 @@ def ann_topk_ivf_batch(
     is exact by construction). One count job total for the common path."""
     if not queries:
         raise ValueError("ann_topk_ivf_batch: empty query list")
+    check_k("ann_topk_ivf_batch", k)
     if centroids is None:
         centroids = ivf_train_centroids(emb, emb_col, n_centroids)
     qids = [int(q) for q, _ in queries]
@@ -521,12 +541,9 @@ def ann_topk_ivf_batch(
     have = _counts_by_query(cand)  # ONE count job for all N queries
     exact_q = sorted(q for q in qids if have.get(q, 0) < k)
     if exact_q:
-        qdf = spark.createDataFrame([(q,) for q in exact_q], "query_id long")
-        exact = (
-            _ensure_parallelism(emb.select(id_col, emb_col))
-            .crossJoin(F.broadcast(qdf))
-            .select("query_id", id_col, emb_col)
-        )
+        # widened (textops._ensure_parallelism) for the interpreted cosine
+        wide = _ensure_parallelism(emb.select(id_col, emb_col))
+        exact = _exact_cands(spark, wide, exact_q, id_col, emb_col)
         cand = cand.where(~F.col("query_id").isin(exact_q)).unionByName(exact)
     if stats_out is not None:
         stats_out.update(
@@ -632,12 +649,13 @@ def knn_embedding_self_join(
 
     Self matches are excluded by key (query_id != id), not by rank — two
     distinct vectors can be bit-identical (cos 1.0), and those must count
-    among the k others (the knn_self_join rationale, knn.py:307).
+    among the k others (the rationale of knn.knn_self_join).
 
     At small N every query escalates (cells are tiny) — correctness never
     depends on escalation being rare. Pass pre-trained `centroids`/`params`
     to pin the index across calls (and to make results layout-independent:
     ivf_train_centroids samples in partition order)."""
+    check_k("knn_embedding_self_join", k)
     if centroids is None:
         centroids = ivf_train_centroids(emb, emb_col, n_centroids)
     if params is None:
@@ -704,15 +722,13 @@ def knn_embedding_self_join(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    w_approx = Window.partitionBy("query_id").orderBy(
-        F.desc("_approx"), F.asc("_did")
-    )
-    shortlist = (
+    approx = (
         qs.join(ds, "_cell")
         .where(F.col("query_id") != F.col("_did"))
         .withColumn("_approx", approx_dot)
-        .withColumn("_rn", F.row_number().over(w_approx))
-        .where(F.col("_rn") <= r)
+    )
+    shortlist = (
+        top_k(approx, r, "query_id", [F.desc("_approx"), F.asc("_did")])
         .select("query_id", "_did")
         # lazy (round 9): the deficiency take(1) below must build ok_q —
         # which aggregates the FULL shortlist — before it can return, so the
@@ -721,7 +737,7 @@ def knn_embedding_self_join(
     )
 
     # deficiency stays DISTRIBUTED: a query is short iff its shortlist holds
-    # < k rows (R >= k, so the window never hid qualifying candidates) or it
+    # < k rows (R >= k, so top_k never hid qualifying candidates) or it
     # is absent entirely (alone in all its probed cells)
     ok_q = (
         shortlist.groupBy("query_id")
@@ -733,18 +749,11 @@ def knn_embedding_self_join(
         ok_q, "query_id", "left_anti"
     )
 
-    exact_cos = _cos_expr(F.col("_qe"), F.col("_de"))
-    w_exact = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("_did")
-    )
-
     def _topk(cand: DataFrame) -> DataFrame:
-        return (
-            cand.withColumn("cos_sim", exact_cos)
-            .withColumn("rank", F.row_number().over(w_exact))
-            .where(F.col("rank") <= k)
-            .select("query_id", "rank", F.col("_did").alias(id_col), "cos_sim")
-        )
+        scored = cand.withColumn("cos_sim", _cos_expr(F.col("_qe"), F.col("_de")))
+        return top_k(
+            scored, k, "query_id", [F.desc("cos_sim"), F.asc("_did")], rank="rank"
+        ).select("query_id", "rank", F.col("_did").alias(id_col), "cos_sim")
 
     e_q = base.select(F.col("_id").alias("query_id"), F.col("_emb").alias("_qe"))
     e_d = base.select(F.col("_id").alias("_did"), F.col("_emb").alias("_de"))
@@ -794,17 +803,8 @@ def embedding_near_dup_pairs(
         emb, emb_col, dim, n_tables, n_bits, multiprobe=multiprobe
     ).select(F.col(id_col).alias("_id"), F.explode("buckets").alias("bucket"))
     if bucket_cap is not None:
-        w = Window.partitionBy("bucket").orderBy("_id")
-        a_b = (
-            a_b.withColumn("_bn", F.row_number().over(w))
-            .where(F.col("_bn") <= bucket_cap)
-            .drop("_bn")
-        )
-        probe_b = (
-            probe_b.withColumn("_bn", F.row_number().over(w))
-            .where(F.col("_bn") <= bucket_cap)
-            .drop("_bn")
-        )
+        a_b = top_k(a_b, bucket_cap, "bucket", ["_id"])
+        probe_b = top_k(probe_b, bucket_cap, "bucket", ["_id"])
     a = a_b.select("bucket", F.col("_id").alias("id_a"))
     c = probe_b.select("bucket", F.col("_id").alias("id_b"))
     pairs = (
@@ -882,19 +882,9 @@ def _exact_topk_batch(
     corpus-scale job against the broadcast query table (never a driver-side
     toPandas of the corpus: the ground truth must be computable at any
     corpus size the sampled queries are drawn from)."""
-    cand = (
-        emb.select(id_col, emb_col)
-        .crossJoin(
-            F.broadcast(
-                spark.createDataFrame(
-                    [(int(q), [float(x) for x in v]) for q, v in queries],
-                    "query_id long, _qv array<double>",
-                )
-            )
-        )
-        .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col, emb_col)
-    )
+    cand = _exact_cands(
+        spark, emb, [int(q) for q, _ in queries], id_col, emb_col
+    ).where(F.col("query_id") != F.col(id_col))
     return _score_and_rank(spark, cand, queries, k, id_col, emb_col)
 
 
@@ -1162,6 +1152,7 @@ def ann_topk_sq8(
     One job shape: phase 1 is TakeOrderedAndProject over the code scan
     (map-side top-R per partition, R rows to the driver plan), phase 2
     reranks those R rows — no count jobs, no checkpoints."""
+    check_k("ann_topk_sq8", k)
     if params is None:
         params = sq8_train(emb, emb_col)
         emb = with_sq8(emb, params, emb_col, code_col)
@@ -1192,35 +1183,22 @@ def ann_topk_sq8_batch(
     """N-query SQ8 top-k -> (query_id, vec_id, cos_sim), identical per-query
     results to N ann_topk_sq8 calls (asserted in tests) with job count
     independent of N: ONE pass scores every (doc, query) approximate cosine
-    against the broadcast query table, a per-query window keeps the top
+    against the broadcast query table, top_k keeps each query's top
     R = rerank_factor*k, and the exact rerank runs on those N*R rows."""
     if not queries:
         raise ValueError("ann_topk_sq8_batch: empty query list")
+    check_k("ann_topk_sq8_batch", k)
     if params is None:
         params = sq8_train(emb, emb_col)
         emb = with_sq8(emb, params, emb_col, code_col)
     r = max(int(rerank_factor) * k, k)
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "query_id long, _qv array<double>",
+    approx = emb.join(F.broadcast(_query_vectors(spark, queries))).withColumn(
+        "_approx",
+        _cos_expr(sq8_decode_expr(F.col(code_col), params), F.col("_qv")),
     )
-    approx = (
-        emb.join(F.broadcast(qdf))
-        .withColumn(
-            "_approx",
-            _cos_expr(sq8_decode_expr(F.col(code_col), params), F.col("_qv")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("_approx"), F.asc(id_col))
-    shortlist = (
-        approx.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= r)
-        .drop("_rn", "_approx")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        shortlist.withColumn("cos_sim", _cos_expr(F.col(emb_col), F.col("_qv")))
-        .withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= k)
-        .select("query_id", id_col, "cos_sim")
+    shortlist = top_k(
+        approx, r, "query_id", [F.desc("_approx"), F.asc(id_col)]
+    ).withColumn("cos_sim", _cos_expr(F.col(emb_col), F.col("_qv")))
+    return top_k(shortlist, k, "query_id", [F.desc("cos_sim"), F.asc(id_col)]).select(
+        "query_id", id_col, "cos_sim"
     )
