@@ -44,13 +44,7 @@ def main() -> None:
     # the store is empty.
     probe = SnapshotStore(args.store, n_buckets=args.n_buckets)
     latest = probe.latest_id()
-    # .get(): legacy manifests predate the n_buckets field (apply_diff itself
-    # tolerates the miss the same way) — fall back to the CLI value
-    n_buckets = (
-        probe.manifest().get("n_buckets", args.n_buckets)
-        if latest is not None
-        else args.n_buckets
-    )
+    n_buckets = probe.manifest()["n_buckets"] if latest is not None else args.n_buckets
     store = SnapshotStore(args.store, n_buckets=n_buckets)
     committed = stream_commit_diffs(spark, args.diffs, store, args.checkpoint)
     print(

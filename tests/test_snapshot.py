@@ -4,11 +4,12 @@ bucket rewrite on moves), lineage, resumable per-zoom builds."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
-from tiledspark import synth, tiles
+from tiledspark import snapshot, synth, tiles
 from tiledspark.extract import dedupe_latest_by_url, extract_coords
 from tiledspark.snapshot import SnapshotStore, checkpointed_tile_build
 
@@ -16,6 +17,32 @@ from tiledspark.snapshot import SnapshotStore, checkpointed_tile_build
 @pytest.fixture()
 def store(tmp_path):
     return SnapshotStore(str(tmp_path / "store"), n_buckets=8)
+
+
+def _spy_row_groups(monkeypatch) -> list[tuple[str, list[int]]]:
+    """(file, row groups read) for every file a driver-side point read
+    opens, in order."""
+    opened = []
+    real = snapshot._row_groups
+
+    def spy(path, col, values):
+        out = real(path, col, values)
+        opened.append((path, out[1]))
+        return out
+
+    monkeypatch.setattr(snapshot, "_row_groups", spy)
+    return opened
+
+
+def _spark_side(monkeypatch, fn):
+    """fn() with a row budget of 0, so every point read is a Spark scan."""
+    with monkeypatch.context() as mp:
+        mp.setattr(snapshot, "LOCAL_READ_MAX_ROWS", 0)
+        return fn()
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(r) for r in df.collect())
 
 
 def _doc_tiles(spark, pages_path):
@@ -188,10 +215,11 @@ def test_checkpointed_build_resumes(spark, pages_path, store):
     assert z8.count() == direct.count()
 
 
-def test_point_lookups_open_one_bucket_only(spark, tmp_path, pages_path):
+def test_point_lookups_open_one_bucket_only(spark, tmp_path, pages_path, monkeypatch):
     """Ops 10-12 (round-1 gap): get_by_key / read_tile / tiles_for_key must
-    scan ONLY the matching bucket's files (the reference's Get/GetTile
-    serving shape, SURVEY.md §3.1 EP3)."""
+    open ONLY the matching bucket's files (the reference's Get/GetTile
+    serving shape, SURVEY.md §3.1 EP3). The reads run on the driver, so the
+    files are those the driver opened; a LocalRelation has no inputFiles()."""
     from pyspark.sql import functions as F
 
     from tiledspark import tiles
@@ -212,25 +240,34 @@ def test_point_lookups_open_one_bucket_only(spark, tmp_path, pages_path):
     url, tile_id = sample["url"], sample["tile_id"]
     expected_bucket = f"tbucket={tile_id % 16}"
 
+    opened = _spy_row_groups(monkeypatch)
+    full = store.read(spark)
+    all_files = {urlparse(f).path for f in full.inputFiles()}
+
     # GetTile: exactly the tile's rows, read from exactly one bucket dir
     td = store.read_tile(spark, tile_id)
-    tile_files = td.inputFiles()
+    tile_files = {f for f, _ in opened}
     assert tile_files and all(expected_bucket in f for f in tile_files), tile_files
-    full = store.read(spark)
     assert td.count() == full.where(F.col("tile_id") == tile_id).count()
+    # a bucket read is a strict subset of the snapshot's files
+    assert tile_files < all_files
 
-    # Get(key): the row itself, via the key index, one bucket scanned
-    got = store.get_by_key(spark, url)
-    rows = got.collect()
+    # Get(key): the row itself, via the key index, one bucket read
+    opened.clear()
+    rows = store.get_by_key(spark, url).collect()
     assert len(rows) == 1 and rows[0]["url"] == url
-    assert all(expected_bucket in f for f in got.inputFiles()), got.inputFiles()
+    data_files = [f for f, _ in opened if "/tbucket=" in f]
+    index_files = [f for f, _ in opened if "/_keyindex/" in f]
+    assert data_files and all(expected_bucket in f for f in data_files), opened
+    assert len({os.path.dirname(f) for f in index_files}) == 1, opened
 
-    # tiles_for_key: index rows name the bucket
+    # tiles_for_key: index rows name the tile, from one index partition
+    opened.clear()
     idx_rows = store.tiles_for_key(spark, url).collect()
-    assert {r["tbucket"] for r in idx_rows} == {tile_id % 16}
-
-    # a bucket scan is a strict subset of the snapshot's files
-    assert set(tile_files) < set(full.inputFiles())
+    assert {r["tile_id"] for r in idx_rows} == {tile_id}
+    assert opened and {os.path.dirname(f) for f, _ in opened} == {
+        os.path.dirname(f) for f in index_files
+    }
 
 
 def test_point_lookup_numeric_bigint_key(spark, tmp_path):
@@ -248,7 +285,7 @@ def test_point_lookup_numeric_bigint_key(spark, tmp_path):
     assert store.manifest()["index_key_type"] == "bigint"
     for key in (0, 123, 499):  # plain python ints, as a caller would pass
         idx = store.tiles_for_key(spark, key).collect()
-        assert {r["tbucket"] for r in idx} == {key % 37 % 8}, key
+        assert {r["tile_id"] for r in idx} == {key % 37}, key
         rows = store.get_by_key(spark, key).collect()
         assert len(rows) == 1 and rows[0]["text"] == f"payload-{key}"
 
@@ -451,22 +488,166 @@ def _small_store(spark, tmp_path, name="pstore"):
     return store, store.commit(df, key_col="tile_id", index_key="url")
 
 
-def test_point_reads_run_one_job(spark, tmp_path):
+def test_point_reads_run_no_job(spark, tmp_path, monkeypatch):
+    """read_tile, get_by_key and tiles_for_key read on the driver and hand
+    Spark a LocalRelation: collecting one runs no Spark job, for a present
+    key and an absent one. Over the row budget they run the Spark scan."""
     from conftest import jobs_in_group
 
     sc = spark.sparkContext
     store, _ = _small_store(spark, tmp_path)
-    rows, n = jobs_in_group(sc, "gbk-present", lambda: store.get_by_key(spark, "u42").collect())
-    assert [(r["url"], r["text"]) for r in rows] == [("u42", "v0-42")]
-    assert n <= 1
-    rows, n = jobs_in_group(sc, "gbk-absent", lambda: store.get_by_key(spark, "nope").collect())
-    assert rows == [] and n == 0
-    absent = store.get_by_key(spark, "nope")
-    assert absent.inputFiles() == []
-    assert absent.schema == store.get_by_key(spark, "u42").schema
-    rows, n = jobs_in_group(sc, "read-tile", lambda: store.read_tile(spark, 13).collect())
-    assert sorted(int(r["url"][1:]) for r in rows) == list(range(13, 400, 29))
-    assert n == 1
+    cases = {
+        "gbk-present": (lambda: store.get_by_key(spark, "u42"), [("u42", 13, "v0-42")]),
+        "gbk-absent": (lambda: store.get_by_key(spark, "nope"), []),
+        "tfk-present": (lambda: store.tiles_for_key(spark, "u42"), [("u42", 13)]),
+        "tfk-absent": (lambda: store.tiles_for_key(spark, "nope"), []),
+        "tile-present": (
+            lambda: store.read_tile(spark, 13),
+            [(f"u{i}", 13, f"v0-{i}") for i in range(13, 400, 29)],
+        ),
+        "tile-absent": (lambda: store.read_tile(spark, 30), []),
+    }
+    for group, (read, want) in cases.items():
+        rows, n = jobs_in_group(sc, group, lambda: read().collect())
+        assert sorted(tuple(r) for r in rows) == sorted(want), group
+        assert n == 0, group
+        df = read()
+        assert df.inputFiles() == [] and df.schema == _spark_side(monkeypatch, read).schema
+    rows, n = _spark_side(
+        monkeypatch,
+        lambda: jobs_in_group(sc, "tile-spark", lambda: store.read_tile(spark, 13).collect()),
+    )
+    assert len(rows) == len(range(13, 400, 29)) and n == 1
+
+
+def test_point_reads_prune_row_groups(spark, tmp_path, monkeypatch):
+    """Data files are sorted by tile and index files by key, so the footers'
+    min/max name the row groups a point read needs: it opens one bucket's
+    file and reads fewer than all of its row groups."""
+    import pyarrow.parquet as pq
+
+    spark.conf.set("parquet.block.size", "2048")  # ~100-row row groups
+    try:
+        store = SnapshotStore(str(tmp_path / "rgstore"), n_buckets=8)
+        df = spark.range(4000).select(
+            F.concat(F.lit("u"), F.col("id")).alias("url"),
+            (F.col("id") % 29).alias("tile_id"),
+            F.concat(F.lit("v0-"), F.col("id")).alias("text"),
+        )
+        store.commit(df, key_col="tile_id", index_key="url")
+    finally:
+        spark.conf.unset("parquet.block.size")
+    opened = _spy_row_groups(monkeypatch)
+    rows = store.read_tile(spark, 13).collect()
+    assert sorted(int(r["url"][1:]) for r in rows) == list(range(13, 4000, 29))
+    [(path, rgs)] = opened
+    assert "/tbucket=5/" in path
+    assert 0 < len(rgs) < pq.ParquetFile(path).metadata.num_row_groups
+    for key in ("u42", "u3999", "u0"):
+        opened.clear()
+        rows = store.get_by_key(spark, key).collect()
+        assert [r["url"] for r in rows] == [key]
+        for path, rgs in opened:
+            assert 0 < len(rgs) < pq.ParquetFile(path).metadata.num_row_groups, (key, path)
+        idx = [p for p, _ in opened if "/_keyindex/" in p]
+        data = [p for p, _ in opened if "/tbucket=" in p]
+        assert len(idx) == 1 and len(data) == 1, opened
+
+
+def test_point_reads_match_the_spark_scan(spark, tmp_path, monkeypatch):
+    """The driver read returns the rows and schema of the Spark scan, over
+    data columns Spark writes in every parquet form (INT96 timestamps,
+    timestamp_ntz, decimal, binary, array, struct, map, nulls), for an empty
+    bucket, and after a diff that moves and deletes rows."""
+    store = SnapshotStore(str(tmp_path / "tstore"), n_buckets=8)
+    i = F.col("id")
+    df = spark.range(60).select(
+        F.concat(F.lit("u"), i).alias("url"),
+        (i % 7).alias("tile_id"),  # tbucket=7 stays empty
+        F.timestamp_micros((i - 30) * 86_400_000_123).alias("ts"),
+        F.timestamp_micros(i * 1_000_001).cast("timestamp_ntz").alias("ntz"),
+        F.when(i % 5 == 0, None).otherwise((i / 3).cast("decimal(12,3)")).alias("dec"),
+        F.concat(F.lit("b"), i).cast("binary").alias("bin"),
+        F.array(i, F.lit(None).cast("long")).alias("arr"),
+        F.struct(i.alias("a"), F.lit("s").alias("b")).alias("st"),
+        F.create_map(F.lit("m"), i).alias("mp"),
+    )
+    s1 = store.commit(df, key_col="tile_id", index_key="url")
+    # u3 moves from tile 3 to tile 5, u4 is deleted, u8 is replaced in place
+    delta = (
+        df.where(i.isin(3, 8))
+        .withColumn("tile_id", F.when(F.col("url") == "u3", 5).otherwise(F.col("tile_id")))
+        .withColumn("dec", F.lit(None).cast("decimal(12,3)"))
+        .withColumn("op", F.lit("upsert"))
+        .unionByName(df.where(i == 4).withColumn("op", F.lit("delete")))
+        .drop("id")
+    )
+    s2 = store.apply_diff(spark, delta, row_key="url")
+    reads = [
+        *(lambda sid, t=t: store.read_tile(spark, t, sid) for t in range(8)),
+        *(
+            lambda sid, k=k, f=f: f(spark, k, sid)
+            for k in ("u3", "u4", "u8", "u59", "absent")
+            for f in (store.get_by_key, store.tiles_for_key)
+        ),
+    ]
+    for sid in (s1, s2):
+        full = store.read(spark, sid)
+        for read in reads:
+            local = read(sid)
+            scan = _spark_side(monkeypatch, lambda: read(sid))
+            assert local.schema == scan.schema
+            assert _rows(local) == _rows(scan)
+        for t in range(8):
+            want = _rows(full.where(F.col("tile_id") == t))
+            assert _rows(store.read_tile(spark, t, sid)) == want, (sid, t)
+    assert store.read_tile(spark, 7).collect() == []
+    assert [r["tile_id"] for r in store.get_by_key(spark, "u3").collect()] == [5]
+    assert store.get_by_key(spark, "u4").collect() == []
+
+
+def test_apply_diff_skips_old_bucket_lookup_when_every_bucket_is_new(
+    spark, tmp_path, monkeypatch
+):
+    """When the delta's own buckets are every bucket, the old buckets cannot
+    widen the rewrite: the lookup job is skipped, and the rows and the
+    manifest's diff record equal a run that looks them up."""
+    import shutil
+
+    from conftest import jobs_in_group
+
+    sc = spark.sparkContext
+    store, _ = _small_store(spark, tmp_path, "skip_a")
+    shutil.copytree(store.root, str(tmp_path / "skip_b"))
+    other = SnapshotStore(str(tmp_path / "skip_b"), n_buckets=8)
+    # upserts land in all 8 buckets; u7 moves from tile 7 to 3, u8 is deleted
+    delta = spark.createDataFrame(
+        [(f"n{t}", t, f"new-{t}", "upsert") for t in range(8)]
+        + [("u7", 3, "v1-7", "upsert"), ("u8", 0, None, "delete")],
+        "url string, tile_id long, text string, op string",
+    ).localCheckpoint()
+    looked_up = []
+    real = SnapshotStore._old_buckets
+
+    def spy(self, old, key_col, new_buckets):
+        out = real(self, old, key_col, new_buckets)
+        looked_up.append(out)
+        return out
+
+    monkeypatch.setattr(SnapshotStore, "_old_buckets", spy)
+    sid_a, jobs_a = jobs_in_group(sc, "diff-skip", lambda: store.apply_diff(spark, delta, "url"))
+    assert looked_up == [set()]
+    # the reference run: the same diff, with the lookup forced
+    monkeypatch.setattr(
+        SnapshotStore, "_old_buckets", lambda self, old, key_col, new: spy(self, old, key_col, set())
+    )
+    sid_b, jobs_b = jobs_in_group(sc, "diff-lookup", lambda: other.apply_diff(spark, delta, "url"))
+    assert looked_up[1] == {7, 0}, looked_up
+    assert jobs_a < jobs_b
+    assert store.manifest(sid_a)["diff"] == other.manifest(sid_b)["diff"]
+    rows_a, rows_b = _rows(store.read(spark)), _rows(other.read(spark))
+    assert rows_a == rows_b and len(rows_a) == 400 + 8 - 1
+    assert _rows(store.get_by_key(spark, "u7")) == _rows(other.get_by_key(spark, "u7"))
 
 
 def test_get_by_key_reads_one_manifest(spark, tmp_path, monkeypatch):
@@ -487,9 +668,10 @@ def test_get_by_key_reads_one_manifest(spark, tmp_path, monkeypatch):
     assert [(r["tile_id"], r["text"]) for r in rows] == [(3, "v1-7")]
 
 
-def test_get_by_key_every_key_type(spark, tmp_path):
-    """The driver-side index read finds keys of every accepted type,
-    including null-free duplicates (boolean) and pre-epoch dates/times."""
+def test_get_by_key_every_key_type(spark, tmp_path, monkeypatch):
+    """The driver-side index and data reads find keys of every accepted
+    type, including null-free duplicates (boolean) and pre-epoch
+    dates/times, with the rows of the Spark scan."""
     from tiledspark import sparkhash
 
     base = spark.range(40).select(
@@ -514,10 +696,16 @@ def test_get_by_key_every_key_type(spark, tmp_path):
         assert store.manifest()["index_key_type"] == t
         want: dict = {}
         for r in df.collect():
-            want.setdefault(r["k"], set()).add(r["p"])
+            want.setdefault(r["k"], {})[r["p"]] = r["tile_id"]
         for v in list(want)[:3] + list(want)[-2:]:
-            got = {r["p"] for r in store.get_by_key(spark, v).collect()}
-            assert got == want[v], (t, v)
+            got = store.get_by_key(spark, v)
+            assert {r["p"] for r in got.collect()} == set(want[v]), (t, v)
+            tiles = store.tiles_for_key(spark, v)
+            assert {r["tile_id"] for r in tiles.collect()} == set(want[v].values()), (t, v)
+        v = list(want)[-1]
+        for read in (store.get_by_key, store.tiles_for_key):
+            scan = _spark_side(monkeypatch, lambda: read(spark, v))
+            assert _rows(read(spark, v)) == _rows(scan) and scan.schema == read(spark, v).schema
 
 
 def test_read_schema_is_the_inferred_schema(spark, tmp_path):

@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -71,3 +74,16 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, data: pa.Table | dict, schema: StructType | str) -> DataFrame:
+    """A frame of rows the driver holds: a pyarrow Table, or a dict of
+    column lists, with a Spark schema (StructType or DDL string). Spark
+    plans it as a LocalRelation, so collecting or broadcasting it runs no
+    job. createDataFrame over a Python list instead plans an RDD that a
+    Python worker unpickles: one job, and about 1 cpu-s, per use."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        data = pa.Table.from_pydict(data, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(data, schema)

@@ -12,8 +12,10 @@ OverwriteFiles with the same partition-level granularity. (Deliberately
 named `snapshot`, not "iceberg" — SURVEY.md risk R3.)
 
 Layout under a store root:
-  data/<snapshot_id>/tbucket=<k>/*.parquet    immutable data files
-  data/<snapshot_id>/_keyindex/ibucket=<k>/   key index, when committed with index_key
+  data/<snapshot_id>/tbucket=<k>/*.parquet    immutable data files, sorted by key_col
+  data/<snapshot_id>/_keyindex/ibucket=<k>/   key index (index_key, key_col): each
+                                              key's tile, sorted by index_key; only
+                                              when committed with index_key
   manifests/<snapshot_id>.json                file list + lineage + meta
   LATEST                                      pointer file (os.replace = atomic)
   tags.json                                   tag -> first snapshot id; the only
@@ -24,10 +26,16 @@ the schema of its data files and of its index files, as Spark's parquet
 reader would infer it (every field nullable), and every read hands it to
 the reader, so no read runs a schema-inference job.
 
-Point reads plan on the driver: read_tile's bucket is tile_id % n_buckets,
-and get_by_key hashes the key with a port of Spark's xxhash64
-(tiledspark.sparkhash), reads the key's one index partition with pyarrow,
-and hands Spark only the scan of the bucket(s) that hold the rows.
+Point reads run no Spark job. read_tile's bucket is tile_id % n_buckets.
+get_by_key hashes the key with a port of Spark's xxhash64
+(tiledspark.sparkhash) to find its one index partition, whose entries name
+the key's tiles, and so their buckets. Because data files are sorted by
+key_col and index files by index_key, the footers' min/max statistics name
+the few row groups that can hold the wanted tiles or key. Those are read
+with pyarrow on the driver and handed to Spark as a LocalRelation
+(session.local_frame), which the caller collects without a job. When they
+hold more than LOCAL_READ_MAX_ROWS rows, or the schema has no Arrow form,
+the read stays a Spark scan of the bucket's files.
 
 Partitioning: rows are hash-bucketed on the table key's tile (tbucket =
 pmod(tile_id, n_buckets)) so a diff touching T tiles rewrites at most
@@ -53,24 +61,29 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from tiledspark import sparkhash
+from tiledspark.session import local_frame
 
 DEFAULT_BUCKETS = 32
 
-# the arrow type of each index key type's Spark value (sparkhash.internal_value)
-_ARROW_KEY_TYPES = {
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "boolean": pa.bool_(),
-    "tinyint": pa.int8(),
-    "smallint": pa.int16(),
-    "int": pa.int32(),
-    "date": pa.date32(),
-    "bigint": pa.int64(),
-    "timestamp": pa.timestamp("us", tz="UTC"),
-}
+# A point read reads its row groups on the driver only while they hold at
+# most this many rows; above it, a Spark scan is cheaper. read_tile of one
+# tile, then select("url").collect(), median of 3-5 steady calls on a 4-core
+# host at local[4] (wall ms / process-tree cpu-s):
+#
+#   result rows   driver read       Spark scan
+#   10^2            55 / 0.13        298 / 0.62
+#   10^3            86 / 0.20        188 / 0.39
+#   10^4           104 / 0.17        214 / 0.38
+#   10^5           848 / 1.00        571 / 0.72
+#   10^6          4608 / 6.73       3812 / 5.49
+#
+# The crossover lies between 10^4 and 10^5 rows; the budget sits near its
+# geometric middle. It also bounds what a point read collects to the driver.
+LOCAL_READ_MAX_ROWS = 30_000
 
 
 def _nullable(t):
@@ -95,6 +108,32 @@ def _nullable(t):
             "valueType": _nullable(t["valueType"]),
         }
     return t
+
+
+def _may_hold(stats, values: list) -> bool:
+    """Whether a column chunk with these footer statistics may hold one of
+    values. Without comparable min/max (Spark writes timestamps as INT96,
+    which has none) it may hold anything."""
+    if stats is None or not stats.has_min_max:
+        return True
+    try:
+        return any(stats.min <= v <= stats.max for v in values)
+    except (TypeError, pa.ArrowNotImplementedError):
+        return True
+
+
+def _row_groups(path: str, col: str, values: list) -> tuple[pq.ParquetFile, list[int], int]:
+    """path opened for reading, the row groups whose min/max of col may hold
+    one of values, and how many rows they hold: footer reads only."""
+    pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+    md = pf.metadata
+    j = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+    rgs = [
+        i
+        for i in range(md.num_row_groups)
+        if _may_hold(md.row_group(i).column(j).statistics, values)
+    ]
+    return pf, rgs, sum(md.row_group(i).num_rows for i in rgs)
 
 
 class SnapshotStore:
@@ -184,9 +223,11 @@ class SnapshotStore:
         """Write df partitioned by tbucket as a new immutable snapshot.
         carried_files (copy-on-write): files from an earlier snapshot included
         by reference, NOT rewritten. index_key: also write a compact
-        (index_key, tbucket) side index — the analogue of tiled-db's id→tiles
-        index, consulted by apply_diff to find the OLD bucket of moved rows.
-        The index is itself ibucket-partitioned and copy-on-write: apply_diff
+        (index_key, key_col) side index — tiled-db's id→tiles index,
+        consulted by get_by_key to find a key's tiles and by apply_diff to
+        find the OLD bucket of moved rows. The index is itself
+        ibucket-partitioned, sorted by index_key within each partition so
+        footer statistics prune its reads, and copy-on-write: apply_diff
         passes index_df (the rewritten index partitions only) +
         carried_index_files; index_df=None derives it from df alone, which
         is the whole index only when no files are carried (full commit,
@@ -224,9 +265,12 @@ class SnapshotStore:
         )
 
         def _write_data() -> None:
+            # sorted by tbucket first: the partitioned writer requires that
+            # order, and would otherwise re-sort by tbucket alone, dropping
+            # the key_col order that footer statistics prune point reads by
             (
                 out.repartition("tbucket")
-                .sortWithinPartitions(key_col)
+                .sortWithinPartitions("tbucket", key_col)
                 .write.mode("overwrite")
                 .partitionBy("tbucket")
                 .parquet(data_dir)
@@ -240,12 +284,7 @@ class SnapshotStore:
                 # columns — instead of re-reading the leaf files we wrote two
                 # statements ago (at 100 TB that read-back is a full-table
                 # scan per commit).
-                index_df = df.select(
-                    F.col(index_key),
-                    F.pmod(F.col(key_col), F.lit(self.n_buckets))
-                    .cast("int")
-                    .alias("tbucket"),
-                )
+                index_df = df.select(index_key, key_col)
             _idx = index_df
             # the index job must NOT write inside data_dir while the data
             # job runs: overwrite mode deletes the target dir if it exists,
@@ -263,6 +302,7 @@ class SnapshotStore:
                         "ibucket", self._index_bucket_expr(F.col(index_key))
                     )
                     .repartition("ibucket")
+                    .sortWithinPartitions("ibucket", index_key)
                     .write.mode("overwrite")
                     .partitionBy("ibucket")
                     .parquet(idx_tmp)
@@ -416,7 +456,7 @@ class SnapshotStore:
 
     # --- point lookups (ops 10-12: the reference's Get / GetTile serving
     # surface, SURVEY.md §3.1 EP3) — each opens ONLY the matching bucket's
-    # files, never the full snapshot ---------------------------------------------
+    # files, and of those only the row groups that can hold the rows ------------
 
     def _bucket_paths(self, m: dict[str, Any], buckets: set[int]) -> list[str]:
         parts = {f"tbucket={b}" for b in buckets}
@@ -426,21 +466,70 @@ class SnapshotStore:
             if f["partition"] in parts
         ]
 
+    @staticmethod
+    def _local_table(
+        schema: dict, paths: list[str], col: str, value, prune: tuple[str, list] | None = None
+    ) -> pa.Table | None:
+        """The rows of paths whose col equals value, read with pyarrow on the
+        driver, as the Arrow form of schema. Only the row groups whose footer
+        min/max of prune's column may hold one of prune's values are read;
+        prune defaults to (col, [value]). None when those row groups hold
+        more than LOCAL_READ_MAX_ROWS rows, or when schema has no Arrow
+        form: the caller then scans with Spark."""
+        struct = StructType.fromJson(schema)
+        try:
+            target = to_arrow_schema(struct)
+        except TypeError:  # PySparkTypeError: a Spark type without an Arrow form
+            return None
+        if not paths:
+            return target.empty_table()
+        t = struct[col].dataType.simpleString()
+        v = pa.scalar(
+            sparkhash.internal_value(value, t) if t in sparkhash.KEY_TYPES else value,
+            target.field(col).type,
+        )
+        pcol, pvalues = prune or (col, [v.as_py()])
+        picked = [_row_groups(p, pcol, pvalues) for p in paths]
+        if sum(n for _, _, n in picked) > LOCAL_READ_MAX_ROWS:
+            return None
+        table = pa.concat_tables(
+            [target.empty_table()]
+            + [pf.read_row_groups(rgs).select(target.names).cast(target) for pf, rgs, _ in picked if rgs]
+        )
+        return table.filter(pc.equal(table[col], v))
+
+    def _point_read(
+        self,
+        spark: SparkSession,
+        schema: dict,
+        paths: list[str],
+        col: str,
+        value,
+        prune: tuple[str, list] | None = None,
+    ) -> DataFrame:
+        """_local_table's rows as a LocalRelation, whose collect() runs no
+        Spark job; over the row budget, a Spark scan of paths instead."""
+        table = self._local_table(schema, paths, col, value, prune)
+        if table is None:
+            return self._read(spark, schema, paths).where(F.col(col) == value)
+        return local_frame(spark, table, StructType.fromJson(schema))
+
     def read_tile(
         self, spark: SparkSession, tile_id: int, snapshot_id: int | None = None
     ) -> DataFrame:
         """GetTile: all rows of one tile. Bucket = tile_id % n_buckets is
-        computable without any index, so exactly one tbucket's files are
-        opened (assert via df.inputFiles())."""
+        computable without any index, so only one tbucket's files are
+        opened, and of those only the row groups whose key_col range holds
+        tile_id are read (on the driver, within LOCAL_READ_MAX_ROWS)."""
         m = self.manifest(snapshot_id)
         paths = self._bucket_paths(m, {int(tile_id) % m["n_buckets"]})
-        return self._read(spark, m["schema"], paths).where(F.col(m["key_col"]) == tile_id)
+        return self._point_read(spark, m["schema"], paths, m["key_col"], tile_id)
 
     def _key_index_paths(self, m: dict[str, Any], key_value) -> list[str]:
         """The files of the one index partition key_value hashes into:
         _index_bucket_expr computed on the driver, as the index key's type.
         A null key equals nothing, so it has none."""
-        if not m.get("index_files"):
+        if not m["index_files"]:
             raise ValueError(
                 "snapshot was committed without index_key; point lookups need it"
             )
@@ -454,47 +543,42 @@ class SnapshotStore:
             if f["partition"] == part
         ]
 
-    def _key_buckets(self, m: dict[str, Any], key_value) -> set[int]:
-        """The tbuckets holding key_value, from its index partition read
-        with pyarrow on the driver (the partition's few small files)."""
+    def _key_tiles(self, spark: SparkSession, m: dict[str, Any], key_value) -> set[int]:
+        """The tiles holding key_value, from its index partition, read on
+        the driver (a Spark scan over the row budget)."""
         paths = self._key_index_paths(m, key_value)
-        if not paths:
-            return set()
-        t = m["index_key_type"]
-        at = _ARROW_KEY_TYPES[t]
-        key = pc.field(m["index_key"])
-        if t == "timestamp":  # Spark writes INT96, which arrow reads as ns
-            key = key.cast(at)
-        hits = pq.read_table(
-            paths,
-            columns=["tbucket"],
-            filters=key == pa.scalar(sparkhash.internal_value(key_value, t), at),
-        )
-        return set(hits.column("tbucket").to_pylist())
+        key, tile = m["index_key"], m["key_col"]
+        table = self._local_table(m["index_schema"], paths, key, key_value)
+        if table is None:
+            rows = self._read(spark, m["index_schema"], paths).where(F.col(key) == key_value)
+            return {r[tile] for r in rows.select(tile).distinct().collect()} - {None}
+        return set(table.column(tile).to_pylist()) - {None}
 
     def tiles_for_key(
         self, spark: SparkSession, key_value, snapshot_id: int | None = None
     ) -> DataFrame:
-        """tiles_for_object: the key index rows for one row key — which
-        bucket(s) hold the object (the reference's id→tiles lookup). Opens
-        ONLY the index partition the key hashes into (ibucket pruning)."""
+        """tiles_for_object: the key index rows (index_key, key_col) for one
+        row key — which tile(s) hold the object (the reference's id→tiles
+        lookup). Opens ONLY the index partition the key hashes into
+        (ibucket pruning), and reads it like read_tile."""
         m = self.manifest(snapshot_id)
         paths = self._key_index_paths(m, key_value)
-        return self._read(spark, m["index_schema"], paths).where(
-            F.col(m["index_key"]) == key_value
-        )
+        return self._point_read(spark, m["index_schema"], paths, m["index_key"], key_value)
 
     def get_by_key(
         self, spark: SparkSession, key_value, snapshot_id: int | None = None
     ) -> DataFrame:
         """Get(type, id): one object by row key, as a Python value of the
         index key's type. The index lookup runs on the driver, against the
-        same manifest as the scan, which opens only the bucket(s) that
-        hold the key; an absent key opens no file."""
+        same manifest as the read, which opens only the bucket(s) of the
+        key's tiles, and of their files only the row groups whose key_col
+        range holds one of those tiles; an absent key opens no data file."""
         m = self.manifest(snapshot_id)
-        paths = self._bucket_paths(m, self._key_buckets(m, key_value))
-        return self._read(spark, m["schema"], paths).where(
-            F.col(m["index_key"]) == key_value
+        tiles = self._key_tiles(spark, m, key_value)
+        paths = self._bucket_paths(m, {t % m["n_buckets"] for t in tiles})
+        return self._point_read(
+            spark, m["schema"], paths, m["index_key"], key_value,
+            prune=(m["key_col"], sorted(tiles)),
         )
 
     # --- copy-on-write diff (op 8) ---------------------------------------------------
@@ -521,7 +605,7 @@ class SnapshotStore:
             if existing is not None:
                 return existing
         base_m = self.manifest()
-        if base_m.get("n_buckets") not in (None, self.n_buckets):
+        if base_m["n_buckets"] != self.n_buckets:
             # Round-4 review finding: carrying files partitioned mod K into a
             # store object configured mod K' silently corrupts bucket pruning
             # (read_tile/get_by_key would miss rows in carried partitions).
@@ -536,8 +620,8 @@ class SnapshotStore:
             "tbucket", F.pmod(F.col(key_col), F.lit(self.n_buckets)).cast("int")
         )
         new_buckets = {r["tbucket"] for r in delta.select("tbucket").distinct().collect()}
-        # moved/deleted rows: their OLD bucket comes from the key index (the
-        # analogue of tiled-db's id→tiles lookup), not from the delta itself.
+        # moved/deleted rows: their OLD bucket comes from the key index
+        # (tiled-db's id→tiles lookup), not from the delta itself.
         # The index is ibucket-partitioned + copy-on-write (round-3 fix: it
         # used to be rebuilt from a FULL-STORE leaf scan every diff — O(store)
         # per layer): only the index partitions the delta's keys hash into
@@ -546,7 +630,7 @@ class SnapshotStore:
         index_missing_full_rewrite = False
         new_index_df: DataFrame | None = None
         carried_index_files: list[dict] | None = None
-        if base_m.get("index_files"):
+        if base_m["index_files"]:
             delta_keys = (
                 delta.select(F.col(row_key))
                 .distinct()
@@ -568,15 +652,10 @@ class SnapshotStore:
             old = old_idx.join(
                 F.broadcast(delta_keys.select(row_key)), row_key, "left_semi"
             )
-            old_buckets = {
-                r["tbucket"] for r in old.select("tbucket").distinct().collect()
-            }
+            old_buckets = self._old_buckets(old, key_col, new_buckets)
             # rewritten index partitions: old entries minus affected keys,
-            # plus the upserts' new (key, tbucket) rows
-            upsert_idx = (
-                delta.where(F.col("op") == "upsert")
-                .select(F.col(row_key), F.col("tbucket"))
-            )
+            # plus the upserts' new (key, tile) rows
+            upsert_idx = delta.where(F.col("op") == "upsert").select(row_key, key_col)
             new_index_df = old_idx.join(
                 delta_keys.select(row_key), row_key, "left_anti"
             ).unionByName(upsert_idx)
@@ -611,7 +690,7 @@ class SnapshotStore:
             key_col=key_col,
             parent=base_m["snapshot_id"],
             carried_files=carried,
-            index_key=base_m.get("index_key"),
+            index_key=base_m["index_key"],
             index_df=new_index_df,
             carried_index_files=carried_index_files,
             tag=tag,
@@ -625,6 +704,15 @@ class SnapshotStore:
             },
         )
 
+    def _old_buckets(self, old: DataFrame, key_col: str, new_buckets: set[int]) -> set[int]:
+        """The buckets of old's index rows (key_col = the rows' tiles in the
+        base). When new_buckets already names every bucket, the old ones
+        cannot widen the rewrite, so the lookup job is skipped."""
+        if len(new_buckets) == self.n_buckets:
+            return set()
+        b = F.pmod(F.col(key_col), F.lit(self.n_buckets)).cast("int").alias("b")
+        return {r["b"] for r in old.select(b).distinct().collect()}
+
     # --- snapshot squash (op 9) ----------------------------------------------------
 
     def squash(self, spark: SparkSession) -> int:
@@ -633,7 +721,7 @@ class SnapshotStore:
         m = self.manifest()
         df = self.read(spark)
         return self.commit(
-            df, key_col=m["key_col"], tag="squash", index_key=m.get("index_key")
+            df, key_col=m["key_col"], tag="squash", index_key=m["index_key"]
         )
 
 

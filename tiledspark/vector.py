@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tiledspark.lineage import checkpoint
+from tiledspark.session import local_frame
 from tiledspark.textops import _ensure_parallelism
 from tiledspark.topk import check_k, top_k
 
@@ -369,8 +370,12 @@ def _query_vectors(
     spark: SparkSession, queries: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """The batch's (query_id, _qv) table."""
-    return spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
+    return local_frame(
+        spark,
+        {
+            "query_id": [int(q) for q, _ in queries],
+            "_qv": [[float(x) for x in v] for _, v in queries],
+        },
         "query_id long, _qv array<double>",
     )
 
@@ -380,7 +385,7 @@ def _exact_cands(
 ) -> DataFrame:
     """Every vector x every id in qids -> (query_id, <id_col>, <emb_col>):
     the exact-scan candidates, with the query ids on a broadcast."""
-    qdf = spark.createDataFrame([(q,) for q in qids], "query_id long")
+    qdf = local_frame(spark, {"query_id": qids}, "query_id long")
     return (
         emb.select(id_col, emb_col)
         .crossJoin(F.broadcast(qdf))
@@ -445,7 +450,7 @@ def ann_topk_lsh_batch(
     qb = _np_buckets(qmat, planes)  # (n_queries, n_tables) exact codes
 
     def _probe_df(level: int, only: set[int] | None = None) -> DataFrame:
-        rows = []
+        probe: dict[str, list[int]] = {"query_id": [], "bucket": []}
         for qid, codes in zip(qids, qb):
             if only is not None and qid not in only:
                 continue
@@ -459,8 +464,9 @@ def ann_topk_lsh_batch(
                     for i in range(n_bits)
                     for j in range(i + 1, n_bits)
                 }
-            rows.extend((qid, p) for p in sorted(probes))
-        return spark.createDataFrame(rows, "query_id long, bucket long")
+            probe["query_id"] += [qid] * len(probes)
+            probe["bucket"] += sorted(probes)
+        return local_frame(spark, probe, "query_id long, bucket long")
 
     b = with_lsh_buckets(emb, emb_col, dim, n_tables, n_bits).withColumn(
         "bucket", F.explode("buckets")
@@ -527,8 +533,12 @@ def ann_topk_ivf_batch(
     qmat = np.array([np.asarray(v, np.float64) for _, v in queries])
     d2 = ((qmat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
     order = d2.argsort(axis=1)[:, : min(n_probe, len(centroids))]
-    probe_df = spark.createDataFrame(
-        [(qid, int(c)) for qid, cs in zip(qids, order) for c in cs],
+    probe_df = local_frame(
+        spark,
+        {
+            "query_id": [qid for qid, cs in zip(qids, order) for _ in cs],
+            "centroid_id": [int(c) for cs in order for c in cs],
+        },
         "query_id long, centroid_id int",
     )
     assigned = with_ivf_centroid(emb, centroids, emb_col)
