@@ -19,7 +19,11 @@ median and interquartile range, how many pairs HEAD won, and a verdict:
   not every HEAD run is better than every BASE run;
 - `ok`: none of these.
 
-The exports are removed at the end. Run it from the root of a checkout;
+It ends with one traced run per side (`--trace 1`, seed `--seed`) and
+prints, for every span either side opened, the HEAD - BASE deltas of its
+median `jobs`, `task_s` and `gap_ms`, next to each side's `host.steal_frac`
+and `host.calib_s`: one run, so a pointer to where a change went, not a
+claim. The exports are removed at the end. Run it from the root of a checkout;
 the exit code is 1 if any run failed its checks or any metric is `worse`.
 """
 
@@ -62,12 +66,14 @@ def export(ref: str, dest: str) -> str:
     return sha
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict | None:
+def run_once(
+    checkout: str, workload: str, seed: int, seconds: float, trace: int = 0
+) -> dict | None:
     """One perfbench run -> {metric: value}, or None if it failed."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds)],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, env=env, capture_output=True, text=True,
     )
     lines = p.stdout.strip().splitlines()
@@ -111,6 +117,25 @@ def summarize(metric: dict, pairs: list[tuple[dict, dict]]) -> tuple[str, str]:
     return line, verdict
 
 
+def span_deltas(base: dict, head: dict) -> list[str]:
+    """Per-span HEAD - BASE lines from one traced run per side."""
+    spans = sorted({k.split(".")[0] for k in base if k.endswith(".wall_ms")})
+    lines = [
+        f"{span:>15}: "
+        + ", ".join(
+            f"{m} {base[f'{span}.{m}']:.4g} -> {head[f'{span}.{m}']:.4g}"
+            f" ({head[f'{span}.{m}'] - base[f'{span}.{m}']:+.4g})"
+            for m in ("jobs", "task_s", "gap_ms")
+        )
+        for span in spans
+        if base[f"{span}.wall_ms"] or head[f"{span}.wall_ms"]
+    ]
+    host = ("host.steal_frac", "host.calib_s")
+    return lines + [
+        f"{'host':>15}: " + ", ".join(f"{m[5:]} {base[m]:.4g} -> {head[m]:.4g}" for m in host)
+    ]
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -140,6 +165,7 @@ def main(argv=None) -> int:
                 ),
                 flush=True,
             )
+        traced = {s: run_once(sides[s], args.workload, args.seed, seconds, trace=1) for s in sides}
     finally:
         shutil.rmtree(work, ignore_errors=True)
     print(f"{args.workload}: {len(pairs)} complete pairs, {failed} with a failed run")
@@ -148,6 +174,12 @@ def main(argv=None) -> int:
         line, verdict = summarize(metric, pairs)
         worse |= verdict == "worse"
         print(line)
+    if None in traced.values():
+        failed += 1
+        print(f"traced seed {args.seed}: a run failed")
+    else:
+        print(f"traced seed {args.seed}, per-span median, base -> head (delta):")
+        print("\n".join(span_deltas(traced["base"], traced["head"])))
     return 1 if failed or worse else 0
 
 

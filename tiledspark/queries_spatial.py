@@ -201,9 +201,10 @@ def _rollup_sql() -> str:
     # Round-4 (VERDICT r3 #6): the split/merge STATE machine re-derived as a
     # closed-form CASE over the counts — parent via bit-shift pack, 'reached'
     # via an unnested ancestor list joined against the split set (every
-    # ancestor in [zb, zoom) must be a split tile), exactly the leaf rule
-    # tree.build_tile_tree evaluates. Unreachable deep tiles are dropped on
-    # both sides.
+    # ancestor in [zb, zoom) must be a split tile). tree.build_tile_tree reads
+    # reach off the parent count instead (monotone counts make the two
+    # equal); this SQL keeps the ancestor-list form on purpose, as the
+    # independent reference. Unreachable deep tiles are dropped on both sides.
     return f"""
     WITH pts AS (
         SELECT {_ROLLUP_LAT} AS lat, {_ROLLUP_LON} AS lon FROM customer
@@ -275,8 +276,8 @@ def _rollup_sql() -> str:
 def tile_tree_rollup(spark, sf_dir):
     """Op 13 INCLUDING the split/merge state machine, ORACLED (round-4
     upgrade per VERDICT r3 #6; round 3 oracled only the counts): the REAL
-    tree.build_tile_tree — one doc-scale shuffle, ancestor rollup, reach
-    computation, SPEC-PINNED leaf/split/merged rule — over customer-derived
+    tree.build_tile_tree — one doc-scale shuffle, ancestor rollup, reach from
+    the parent count, SPEC-PINNED leaf/split/merged rule — over customer-derived
     clustered points, while DuckDB re-derives counts AND states closed-form
     (parent by bit-shift, reach by ancestor-list join). The frozen golden
     artifact over the pages corpus stays in pytest + tile_tree_build."""

@@ -10,26 +10,34 @@ SPEC-PINNED split/merge rule (frozen; golden fixtures derive from it):
 
 Resulting leaf rule (provably equivalent, and what the implementation uses —
 one pass over the count table instead of an iterative rewrite):
-- leaf at z in (Z_BASE, Z_MAX]: every ancestor in [Z_BASE, z) has
-  count > max_docs, and (count <= max_docs or z == Z_MAX);
+- leaf at z in (Z_BASE, Z_MAX]: parent count > max_docs, and (count <=
+  max_docs or z == Z_MAX);
 - leaf at Z_BASE: count <= max_docs and parent count >= max_docs/4;
 - leaf at z < Z_BASE: count < max_docs/4 and (z == 0 or parent count >=
   max_docs/4)  [all descendants absorbed — 'merged' state below the leaf].
+
+The deep rule is the fixpoint's "every ancestor in [Z_BASE, z) has count >
+max_docs" (the tile is reached by splits all the way down) in one lookup:
+a tile's docs are a subset of its parent's, so counts never grow with
+depth, and the smallest count on that ancestor chain is the parent's. Every
+state is thus a projection of (zoom, doc_count, parent_count), and the
+tree needs one parent self-join over the count table and nothing else.
 
 States in the emitted tree (SURVEY.md §1.2 tile_tree):
   'materialized' = a leaf; 'split' = has materialized descendants deeper;
   'merged' = absorbed into a shallower merged leaf; 'interior' = rollup
   ancestor above the leaf level.
 
-Scale shape: TWO shuffles total regardless of zoom depth — one groupBy at
-Z_MAX (map-side partial combine does the heavy lifting), then one explode of
-the (already tiny) tile-count table over its ancestor chain + re-aggregate.
-No per-zoom passes over the documents.
+Scale shape: no per-zoom passes over the documents. One groupBy over the
+docs at Z_BASE (map-side partial combine does the heavy lifting), its
+ancestors rolled up from the (tiny) base-tile table, and one more pass over
+only the docs under split base tiles for the counts below Z_BASE (none when
+no base tile splits). Everything after that reads the O(tiles) count table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tiledspark import tiles
@@ -41,7 +49,7 @@ def tile_counts_all_zooms(
     doc_points: DataFrame,
     z_max: int = Z_MAX,
     z_base: int = Z_BASE,
-    max_docs: int | None = None,
+    max_docs: int = MAX_DOCS_PER_TILE,
 ) -> DataFrame:
     """doc_points(lat, lon, ...) -> counts(tile_id, zoom, doc_count).
 
@@ -51,13 +59,10 @@ def tile_counts_all_zooms(
     (count > max_docs — a set provably <= n_docs/max_docs). The naive
     alternative (count at z_max for everything, explode 19 ancestors) shuffles
     ~19x the distinct-tile rows for counts the split rule never looks at.
-
-    When max_docs is None, deep counts cover every tile below z_base
-    (exhaustive mode — used by tests that want the full pyramid).
     """
     docs = doc_points.where(F.col("lat").isNotNull() & F.col("lon").isNotNull())
-    # checkpointed once: three consumers (ancestor rollup, the split-id
-    # broadcast, the deep-docs join) would otherwise each re-run the
+    # checkpointed once: both consumers (ancestor rollup, the split-id
+    # broadcast of the deep-docs join) would otherwise each re-run the
     # doc-scale groupBy; the checkpoint is O(base tiles), never O(docs).
     base, c = checkpoint(
         docs.withColumn("tile_id", tiles.tile_id_expr(F.col("lon"), F.col("lat"), z_base))
@@ -72,18 +77,14 @@ def tile_counts_all_zooms(
         "doc_count",
     ).groupBy("tile_id").agg(F.sum("doc_count").alias("doc_count"))
 
-    if z_max > z_base:
-        splittable = base if max_docs is None else base.where(
-            F.col("doc_count") > max_docs
+    # Short-circuit (round 4): when NO base tile exceeds max_docs the deep
+    # branch is a guaranteed-empty full pass over the docs (join against an
+    # empty broadcast); at planet scale splittable tiles exist and it runs.
+    counts = up
+    if z_max > z_base and c["n_split"]:
+        split_ids = base.where(F.col("doc_count") > max_docs).select(
+            F.col("tile_id").alias("_split_base")
         )
-        # Short-circuit (round 4): when NO base tile exceeds max_docs the
-        # deep branch is a guaranteed-empty full pass over the docs (join
-        # against an empty broadcast); at planet scale splittable tiles
-        # exist and the branch runs.
-        if max_docs is not None and not c["n_split"]:
-            z0, _, _ = tiles.tile_unpack_exprs(F.col("tile_id"))
-            return up.withColumn("zoom", z0)
-        split_ids = splittable.select(F.col("tile_id").alias("_split_base"))
         deep_docs = docs.withColumn(
             "_base", tiles.tile_id_expr(F.col("lon"), F.col("lat"), z_base)
         ).join(
@@ -104,8 +105,6 @@ def tile_counts_all_zooms(
             .agg(F.count(F.lit(1)).alias("doc_count"))
         )
         counts = up.unionByName(deep)
-    else:
-        counts = up
     z, _, _ = tiles.tile_unpack_exprs(F.col("tile_id"))
     return counts.withColumn("zoom", z)
 
@@ -121,9 +120,8 @@ def build_tile_tree(
     The golden tile-tree artifact (BASELINE.json: "golden tile-tree match rate
     100%"). Deterministic: pure function of the doc coordinates.
     """
-    # Eager localCheckpoint, not cache(): the count table feeds FOUR
-    # downstream references (parent self-join, split broadcast, deep set,
-    # ancestor explode). A lazy cache() here never helped — the old code
+    # Eager localCheckpoint, not cache(): the count table feeds BOTH sides of
+    # the parent self-join. A lazy cache() here never helped — the old code
     # unpersisted before the caller's first action, so every reference
     # re-derived counts from scratch, including the doc-scale deep branch
     # (measured 1.36x slower at 1.2M docs). The checkpoint is O(tiles),
@@ -145,39 +143,10 @@ def build_tile_tree(
     )
     t = with_parent.join(pc, "parent_id", "left")
 
-    # 'reached' for z > z_base: every ancestor in [z_base, z) has count > max.
-    # ONE broadcast join: explode each deep tile's ancestors in [z_base, z),
-    # count how many are split tiles, compare to the required chain length.
-    # (A chained per-zoom formulation re-evaluates its whole upstream DAG per
-    # broadcast exchange — measured 5x slower at sf0.1.)
-    split_tiles = counts.where(
-        (F.col("zoom") >= z_base) & (F.col("zoom") < z_max) & (F.col("doc_count") > max_docs)
-    ).select(F.col("tile_id").alias("anc_id"))
-    deep = counts.where(F.col("zoom") > z_base).select("tile_id", "zoom")
-    anc_range = F.filter(
-        tiles.tile_ancestors_expr(F.col("tile_id")),
-        lambda a: (F.shiftrightunsigned(a, 58) >= z_base)
-        & (F.shiftrightunsigned(a, 58) < F.col("zoom")),
-    )
-    deep_anc = deep.select(
-        "tile_id", "zoom", F.explode(anc_range).alias("anc_id")
-    )
-    reached_deep = (
-        deep_anc.join(F.broadcast(split_tiles), "anc_id", "inner")
-        .groupBy("tile_id", "zoom")
-        .agg(F.count(F.lit(1)).alias("n_split_anc"))
-        .where(F.col("n_split_anc") == (F.col("zoom") - F.lit(z_base)))
-        .select("tile_id")
-    )
-    reached_all = counts.where(F.col("zoom") == z_base).select("tile_id").unionByName(
-        reached_deep
-    )
-
-    # NB: no broadcast here — reached_all is O(base tiles), which at planet
-    # scale exceeds broadcast limits; the equi-join shuffles the small count
-    # table only. split_tiles above IS broadcast-safe (≤ docs/max_docs rows).
-    is_reached = F.col("_reached").isNotNull()
-    t = t.join(reached_all.withColumn("_reached", F.lit(1)), "tile_id", "left")
+    # 'reached' for z > z_base: every ancestor in [z_base, z) has count >
+    # max_docs. Counts never grow with depth, so the smallest of those is
+    # the parent's (module docstring).
+    is_reached = F.col("parent_count") > max_docs
 
     deep_leaf = (
         (F.col("zoom") > z_base)
